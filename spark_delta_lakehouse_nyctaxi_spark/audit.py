@@ -1,7 +1,7 @@
 """Audit & metrics persistence.
 
 Reference parity:
-- dq_metrics table: create-if-absent + append one row per check per run
+- dq_metrics table: create-if-absent + one row per check per run
   (etl/dq_metrics.py:12-107)
 - pipeline_runs audit log + lineage reconstruction
   (utils/audit.py:31-138, :177-226)
@@ -9,13 +9,19 @@ Reference parity:
 - run-id generation run_YYYYmmdd_HHMMSS (etl/dq_metrics.py:146-153)
 
 Tables are VersionedTable appends — tiny metadata rows, Spark-written
-so the audit trail lives next to the data at any scale.
+so the audit trail lives next to the data at any scale. Where the
+reference commits one row at a time, a run here stages its rows in
+memory and appends them with ONE commit per table per run
+(:func:`run_scope`). The commit runs when the run ends, also when a
+layer raised, so a failed run still records its ``failed`` row and
+error next to every row staged before it.
 """
 
 from __future__ import annotations
 
 import json
 import time
+from contextlib import ExitStack, contextmanager
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -30,12 +36,59 @@ def generate_run_id(now: float | None = None) -> str:
     return dt.strftime("run_%Y%m%d_%H%M%S")
 
 
-class DQMetricsStore:
-    """Persist CheckResults, one row per check per run."""
+class _Staged:
+    """Audit sink whose rows a run stages and commits once.
+
+    ``depth`` counts the :func:`run_scope` scopes open over the sink;
+    the outermost one commits on exit."""
+
+    depth = 0
+
+    def commit(self) -> None:
+        raise NotImplementedError
+
+    def leave(self) -> None:
+        self.depth -= 1
+        if self.depth == 0:
+            self.commit()
+
+
+@contextmanager
+def run_scope(*sinks: _Staged | None):
+    """Stage the audit rows of the enclosed work and commit each sink
+    once, when the outermost scope over it exits — whether the body
+    returned or raised. A scope nested in another (a layer job inside
+    ``run_pipeline``) only stages; a layer job called on its own is the
+    outermost scope and commits its own rows. Every sink is committed
+    even if another sink's commit raises."""
+    live = [s for s in sinks if s is not None]
+    for s in live:
+        s.depth += 1
+    with ExitStack() as stack:
+        for s in reversed(live):
+            stack.callback(s.leave)
+        yield
+
+
+class _StagedTable(_Staged):
+    """An audit table: rows staged in memory, appended in one write."""
+
+    SCHEMA = ""
 
     def __init__(self, spark: SparkSession, path: str):
         self.table = VersionedTable(spark, path)
         self.spark = spark
+        self.pending: list[Row] = []
+
+    def _append(self) -> None:
+        if self.pending:
+            df = self.spark.createDataFrame(self.pending, schema=self.SCHEMA)
+            self.table.write(df, mode="append" if self.table.exists() else "overwrite")
+            self.pending = []  # only once durable: a failed append keeps them
+
+
+class DQMetricsStore(_StagedTable):
+    """Persist CheckResults, one row per check per run."""
 
     SCHEMA = (
         "run_id string, layer string, check_name string, description string, "
@@ -43,12 +96,21 @@ class DQMetricsStore:
         "check_ts double"
     )
 
-    def record(self, run_id: str, layer: str, results: list[CheckResult]) -> None:
-        rows = [Row(**r.as_row(run_id, layer)) for r in results]
-        if not rows:
-            return
-        df = self.spark.createDataFrame(rows, schema=self.SCHEMA)
-        self.table.write(df, mode="append" if self.table.exists() else "overwrite")
+    def stage(self, run_id: str, layer: str, results: list[CheckResult]) -> None:
+        self.pending += [Row(**r.as_row(run_id, layer)) for r in results]
+
+    def record(
+        self, run_id: str | None = None, layer: str | None = None,
+        results: list[CheckResult] | None = None,
+    ) -> None:
+        """Append the staged rows, plus ``results`` for ``run_id`` and
+        ``layer`` when given, in one commit."""
+        if results:
+            self.stage(run_id, layer, results)
+        self._append()
+
+    def commit(self) -> None:
+        self.record()
 
     def latest_run(self) -> str | None:
         """Latest run_id by check timestamp (etl/dq_metrics.py:128-140)."""
@@ -67,14 +129,18 @@ class DQMetricsStore:
         return self.table.read().filter(F.col("run_id") == run_id)
 
 
-class AuditLog:
+class AuditLog(_StagedTable):
     """pipeline_runs table (utils/audit.py:31-47 schema)."""
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.table = VersionedTable(spark, path)
-        self.spark = spark
+    SCHEMA = (
+        "run_id string, job_name string, layer string, status string, "
+        "start_time double, end_time double, duration_seconds double, "
+        "initial_row_count long, final_row_count long, rows_filtered long, "
+        "rows_deduplicated long, error_message string, metadata_json string, "
+        "created_at double"
+    )
 
-    def log_run(
+    def stage(
         self,
         run_id: str,
         job_name: str,
@@ -89,31 +155,34 @@ class AuditLog:
         error_message: str | None = None,
         metadata: dict | None = None,
     ) -> None:
-        row = Row(
-            run_id=run_id,
-            job_name=job_name,
-            layer=layer,
-            status=status,
-            start_time=float(start_time),
-            end_time=float(end_time),
-            duration_seconds=float(end_time - start_time),
-            initial_row_count=initial_row_count,
-            final_row_count=final_row_count,
-            rows_filtered=rows_filtered,
-            rows_deduplicated=rows_deduplicated,
-            error_message=error_message,
-            metadata_json=json.dumps(metadata or {}),
-            created_at=time.time(),
+        self.pending.append(
+            Row(
+                run_id=run_id,
+                job_name=job_name,
+                layer=layer,
+                status=status,
+                start_time=float(start_time),
+                end_time=float(end_time),
+                duration_seconds=float(end_time - start_time),
+                initial_row_count=initial_row_count,
+                final_row_count=final_row_count,
+                rows_filtered=rows_filtered,
+                rows_deduplicated=rows_deduplicated,
+                error_message=error_message,
+                metadata_json=json.dumps(metadata or {}),
+                created_at=time.time(),
+            )
         )
-        schema = (
-            "run_id string, job_name string, layer string, status string, "
-            "start_time double, end_time double, duration_seconds double, "
-            "initial_row_count long, final_row_count long, rows_filtered long, "
-            "rows_deduplicated long, error_message string, metadata_json string, "
-            "created_at double"
-        )
-        df = self.spark.createDataFrame([row], schema=schema)
-        self.table.write(df, mode="append" if self.table.exists() else "overwrite")
+
+    def log_run(self, *run, **fields) -> None:
+        """Append the staged run rows, plus one built from the
+        :meth:`stage` arguments when given, in one commit."""
+        if run or fields:
+            self.stage(*run, **fields)
+        self._append()
+
+    def commit(self) -> None:
+        self.log_run()
 
     def recent_runs(self, limit: int = 10) -> DataFrame:
         return self.table.read().orderBy(F.col("start_time").desc()).limit(limit)
@@ -140,9 +209,10 @@ class AuditLog:
         ]
 
 
-class PipelineMetrics:
+class PipelineMetrics(_Staged):
     """In-memory run metrics with JSON persistence
-    (utils/metrics.py:12-153)."""
+    (utils/metrics.py:12-153): one row per run, written by
+    :meth:`save_metrics`."""
 
     def __init__(self, spark: SparkSession, path: str | None = None):
         self.spark = spark
@@ -185,3 +255,6 @@ class PipelineMetrics:
             self.spark.createDataFrame([row]),
             mode="append" if t.exists() else "overwrite",
         )
+
+    def commit(self) -> None:
+        self.save_metrics()

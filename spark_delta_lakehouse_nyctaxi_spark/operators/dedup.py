@@ -241,12 +241,21 @@ def minhash_signatures_linear_arrow(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids = batch.column(0)
             lst = batch.column(1)
             lens = np.asarray(
-                pc.list_value_length(lst).to_numpy(zero_copy_only=False),
+                pc.fill_null(pc.list_value_length(lst), 0).to_numpy(
+                    zero_copy_only=False
+                ),
                 dtype=np.int64,
             )
+            # an empty or NULL array explodes to no shingle and so gets
+            # no signature row; reduceat would hand an empty segment the
+            # next doc's value (or index past the end when it is last)
+            keep = lens > 0
+            if not keep.any():
+                continue
+            ids = batch.column(0).filter(pa.array(keep))
+            lens = lens[keep]
             vals = lst.flatten().to_numpy(zero_copy_only=False).astype(
                 np.int64, copy=False
             )

@@ -83,6 +83,9 @@ class DataQualityFramework:
     def __init__(self) -> None:
         self.predicate_checks: list[PredicateCheck] = []
         self.frame_checks: list[FrameCheck] = []
+        # row count of the frame the last evaluation saw: a by-product of
+        # the check aggregate, so callers need no count() job of their own
+        self.rows_checked: int | None = None
 
     # ------------------------------------------------- registration
 
@@ -174,7 +177,7 @@ class DataQualityFramework:
 
     def _results_from_row(self, row: dict) -> list[CheckResult]:
         null_checks = getattr(self, "_null_checks", [])
-        total = row["__total"]
+        total = self.rows_checked = row["__total"]
 
         results: list[CheckResult] = []
         for c in self.predicate_checks:

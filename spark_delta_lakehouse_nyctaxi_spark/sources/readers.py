@@ -126,19 +126,22 @@ def scan_width(sf_dir: str, name: str) -> int:
     """Effective maximum scan parallelism of a star table: a parquet
     scan task cannot split below ROW-GROUP granularity, so per file the
     task ceiling is its row-group count (regardless of
-    maxPartitionBytes).  Cheap footer metadata read, memoized.
+    maxPartitionBytes).  Cheap footer metadata read, memoized under the
+    same (path, mtime) freshness key as the table memo, so a rewritten
+    table reports its new width.
 
     Unknown/nested layouts degrade CONSERVATIVELY: any footer-read
     failure (e.g. a partitioned date=*/part-*.parquet tree where the
     top path is a directory) returns a large width, which makes
     ``load_table_widened`` fall back to plain ``load_table`` instead of
-    raising (round-11 ADVICE)."""
+    raising (round-11 ADVICE).  That fallback is not memoized: a
+    transient failure (a file mid-write) is retried on the next call."""
     import glob
 
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = os.path.abspath(path)
+    key = (os.path.abspath(path), _path_mtime(path))
     w = _SCAN_WIDTH_MEMO.get(key)
     if w is None:
         files = (
@@ -151,13 +154,13 @@ def scan_width(sf_dir: str, name: str) -> int:
         except Exception:
             # unreadable/unknown layout: report "wide enough" so the
             # widening guard self-disables rather than erroring
-            w = 1 << 30
+            return 1 << 30
         _evict_if_full(_SCAN_WIDTH_MEMO)
         _SCAN_WIDTH_MEMO[key] = w
     return w
 
 
-_SCAN_WIDTH_MEMO: dict[str, int] = {}
+_SCAN_WIDTH_MEMO: dict[tuple, int] = {}
 
 
 def load_table_widened(

@@ -224,7 +224,21 @@ class VersionedTable:
         """Atomic put-if-absent of the version manifest: ``os.link``
         fails with EEXIST when another writer already committed this
         version — the optimistic-concurrency conflict signal (os.rename
-        would silently overwrite the winner's commit)."""
+        would silently overwrite the winner's commit).
+
+        The manifest records the row count of every live unit (Delta's
+        per-file ``numRecords``): units carried from the previous
+        snapshot bring theirs; the units this commit adds (and any unit
+        a manifest from before recorded counts left out) are counted
+        here from their parquet footers, by the committing process, with
+        no Spark job."""
+        known = info.extra.get("rows", {})
+        counted = self._footer_rows([u for u in info.units if u not in known])
+        info.extra["rows"] = {
+            u: known[u] if u in known else counted[u]
+            for u in info.units
+            if u in known or u in counted
+        }
         os.makedirs(self._vlog, exist_ok=True)
         tmp = os.path.join(self._vlog, f".{uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as f:
@@ -613,6 +627,54 @@ class VersionedTable:
                 out.extend(self._subunits(f"{rel}/{sub}", nxt, depth - 1))
         return out
 
+    def _footer_rows(self, units: list[str]) -> dict[str, int]:
+        """Row count of each unit summed from its parquet footers. A
+        unit with no readable parquet file is left out: its count stays
+        unknown rather than wrong."""
+        import pyarrow.parquet as pq
+
+        out = {}
+        for u in units:
+            files = [
+                os.path.join(root, fn)
+                for root, _, fns in os.walk(os.path.join(self._data, u))
+                for fn in fns
+                if fn.endswith(".parquet")
+            ]
+            try:
+                if files:
+                    out[u] = sum(pq.read_metadata(f).num_rows for f in files)
+            except (OSError, ValueError):
+                pass
+        return out
+
+    #: manifest entries keyed by unit, valid for as long as the unit is
+    #: live: skipping stats, bloom filters and row counts
+    _PER_UNIT = ("stats", "blooms", "rows")
+
+    @classmethod
+    def _carry(cls, info: VersionInfo, carried: list[str]) -> dict:
+        """The per-unit metadata and pending merge-on-read tombstones of
+        the units a rewrite carries over by reference. Carried units are
+        byte-identical, so their entries stay valid verbatim; rewritten
+        units drop theirs (stats-less units are always scanned) and the
+        tombstones stay scoped to the carried units, whose deleted rows
+        were not materialized."""
+        keep = set(carried)
+        xtra: dict = {}
+        for k in cls._PER_UNIT:
+            sub = {u: v for u, v in info.extra.get(k, {}).items() if u in keep}
+            if sub:
+                xtra[k] = sub
+        mor = [
+            {"pred": d["pred"], "units": scoped}
+            for d in info.extra.get("mor_deletes", [])
+            if (scoped := [u for u in d["units"] if u in keep])
+        ]
+        if mor:
+            xtra["mor_deletes"] = mor
+        return xtra
+
     @staticmethod
     def _jsonable(v):
         """Stats values must round-trip through the JSON manifest AND
@@ -885,6 +947,8 @@ class VersionedTable:
                 stats = {**prev[-1].extra.get("stats", {}), **new_stats}
                 blooms = {**prev[-1].extra.get("blooms", {}), **new_blooms}
             xtra = dict(extra or {})
+            if mode == "append" and prev and prev[-1].extra.get("rows"):
+                xtra["rows"] = prev[-1].extra["rows"]
             if mode == "append" and prev and prev[-1].extra.get("mor_deletes"):
                 # pending merge-on-read tombstones stay scoped to the
                 # pre-append units; the appended rows are never filtered
@@ -1386,30 +1450,7 @@ class VersionedTable:
             carried = []
             kept = self.read().filter(keep_pred)
         new_units = self._write_units(kept, part_cols or None)
-        # Carried-by-reference units are byte-identical, so their
-        # skipping stats stay valid; rewritten units drop theirs (safe —
-        # stats-less units are always scanned).
-        carried_set = set(carried)
-        carried_stats = {
-            u: s for u, s in info.extra.get("stats", {}).items() if u in carried_set
-        }
-        xtra: dict = {"condition": condition}
-        if carried_stats:
-            xtra["stats"] = carried_stats
-        carried_blooms = {
-            u: b for u, b in info.extra.get("blooms", {}).items() if u in carried_set
-        }
-        if carried_blooms:
-            xtra["blooms"] = carried_blooms
-        # pending merge-on-read tombstones stay live on carried units
-        # (their rows were NOT materialized); rewritten units are clean
-        carried_mor = [
-            {"pred": d["pred"], "units": scoped}
-            for d in info.extra.get("mor_deletes", [])
-            if (scoped := [u for u in d["units"] if u in carried_set])
-        ]
-        if carried_mor:
-            xtra["mor_deletes"] = carried_mor
+        xtra = {"condition": condition, **self._carry(info, carried)}
         vinfo = VersionInfo(
             version=info.version + 1,
             timestamp=time.time(),
@@ -1488,25 +1529,7 @@ class VersionedTable:
             ).filter(keep_pred)
             new_units += self._write_units(kept, part_cols or None)
         new_units += self._write_units(df, part_cols or None)
-        carried_set = set(carried)
-        xtra: dict = {"condition": condition}
-        carried_stats = {
-            u: s for u, s in info.extra.get("stats", {}).items() if u in carried_set
-        }
-        if carried_stats:
-            xtra["stats"] = carried_stats
-        carried_blooms = {
-            u: b for u, b in info.extra.get("blooms", {}).items() if u in carried_set
-        }
-        if carried_blooms:
-            xtra["blooms"] = carried_blooms
-        carried_mor = [
-            {"pred": d["pred"], "units": scoped}
-            for d in info.extra.get("mor_deletes", [])
-            if (scoped := [u for u in d["units"] if u in carried_set])
-        ]
-        if carried_mor:
-            xtra["mor_deletes"] = carried_mor
+        xtra = {"condition": condition, **self._carry(info, carried)}
         vinfo = VersionInfo(
             version=info.version + 1,
             timestamp=time.time(),
@@ -1687,11 +1710,20 @@ class VersionedTable:
                         n_files += 1
                         size += os.path.getsize(os.path.join(root, fn))
         stats = info.extra.get("stats", {})
+        rows = info.extra.get("rows", {})
         return {
             "location": self.path,
             "version": info.version,
             "num_files": n_files,
             "size_bytes": size,
+            # from the log's per-unit counts; unknown while tombstones
+            # hide rows or a unit predates recorded counts
+            "num_rows": (
+                sum(rows[u] for u in info.units)
+                if all(u in rows for u in info.units)
+                and not info.extra.get("mor_deletes")
+                else None
+            ),
             "partition_columns": info.partition_by,
             # observability for the scan optimizations: how much of the
             # snapshot can skip, and whether reads pay a tombstone tax
@@ -1717,12 +1749,9 @@ class VersionedTable:
         for attempt in range(10):
             xtra: dict = {"restored_from": version}
             # the restored snapshot's units are byte-identical, so its
-            # skipping stats — and any tombstones pending AT that
+            # per-unit metadata — and any tombstones pending AT that
             # version — come along verbatim
-            if target.extra.get("stats"):
-                xtra["stats"] = target.extra["stats"]
-            if target.extra.get("mor_deletes"):
-                xtra["mor_deletes"] = target.extra["mor_deletes"]
+            xtra.update(self._carry(target, target.units))
             if target.extra.get("column_map"):
                 xtra["column_map"] = target.extra["column_map"]
             info = VersionInfo(
@@ -1846,9 +1875,9 @@ class VersionedTable:
         xtra: dict = {"cloned_from": self.path, "source_version": src.version}
         if dropped:
             xtra["dropped_metadata"] = sorted(dropped)
-        for k in ("stats", "mor_deletes", "column_map"):
-            if src.extra.get(k):
-                xtra[k] = src.extra[k]
+        xtra.update(self._carry(src, src.units))
+        if src.extra.get("column_map"):
+            xtra["column_map"] = src.extra["column_map"]
         info = VersionInfo(
             version=0,
             timestamp=time.time(),
@@ -2153,28 +2182,10 @@ class VersionedTable:
 
         self._check_constraints(merged, "MERGE")
         new_units = self._write_units(merged, part_cols or None)
-        # Carried-by-reference partitions keep their skipping stats and
-        # any pending merge-on-read tombstones (their bytes and their
-        # unmaterialized deletes are both unchanged).
-        carried_set = set(carried_units)
-        xtra = {**(extra or {}), "keys": keys, "pruned": prunable}
-        carried_stats = {
-            u: s for u, s in info.extra.get("stats", {}).items() if u in carried_set
+        xtra = {
+            **(extra or {}), "keys": keys, "pruned": prunable,
+            **self._carry(info, carried_units),
         }
-        if carried_stats:
-            xtra["stats"] = carried_stats
-        carried_blooms = {
-            u: b for u, b in info.extra.get("blooms", {}).items() if u in carried_set
-        }
-        if carried_blooms:
-            xtra["blooms"] = carried_blooms
-        carried_mor = [
-            {"pred": d["pred"], "units": scoped}
-            for d in info.extra.get("mor_deletes", [])
-            if (scoped := [u for u in d["units"] if u in carried_set])
-        ]
-        if carried_mor:
-            xtra["mor_deletes"] = carried_mor
         # Pinned to the snapshot version this merge read (not the
         # current head): a concurrent commit in between must surface as
         # ConcurrentWriteError, not be silently overwritten.

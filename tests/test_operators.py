@@ -1575,3 +1575,28 @@ def test_literal_frame_roundtrip_and_validation(spark):
         literal_frame(spark, [(1, [1.0])], "id int, x array<double>")
     with pytest.raises(ValueError, match="cells for"):
         literal_frame(spark, [(1, 2.0, 3.0)], "id int, x double")
+
+
+@pytest.mark.parametrize("position", ["middle", "last"])
+def test_minhash_arrow_kernel_skips_empty_docs(spark, position):
+    """An empty or NULL shingle array yields no signature row, as in
+    the explode + aggregate form: an empty doc never borrows the next
+    doc's signature, and one last in its batch does not raise."""
+    coeffs = D.linear_hash_coeffs(8)
+    rows = [(1, [3, 5]), (2, [7, 11, 13])]
+    if position == "middle":
+        rows = [rows[0], (9, []), (10, None), rows[1]]
+    else:
+        rows = rows + [(10, None), (9, [])]
+    arrs = spark.createDataFrame(rows, "id long, sh_arr array<bigint>").coalesce(1)
+    sh = arrs.select("id", F.explode("sh_arr").alias("shingle"))
+    jvm = {
+        r["id"]: (list(r["signature"]), r["n_sh"])
+        for r in D.minhash_signatures_linear(sh, coeffs).collect()
+    }
+    arrow = {
+        r["id"]: (list(r["signature"]), r["n_sh"])
+        for r in D.minhash_signatures_linear_arrow(arrs, coeffs).collect()
+    }
+    assert set(jvm) == {1, 2}
+    assert arrow == jvm

@@ -86,3 +86,27 @@ def test_widened_values_identical(spark):
         "RepartitionByExpression"
         in wide._jdf.queryExecution().optimizedPlan().toString()
     )
+
+
+def test_scan_width_tracks_rewrites_and_retries_failures(tmp_path):
+    """The width memo is keyed by the path's mtime like the table memo,
+    so a rewritten table reports its new width, and a failed footer
+    read is not memoized: the next call reads the footers again."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t.parquet"
+    path.write_bytes(b"not parquet yet")
+    os.utime(path, (1_000_000, 1_000_000))
+    assert scan_width(str(tmp_path), "t") == 1 << 30
+
+    tbl = pa.table({"x": list(range(30))})
+    pq.write_table(tbl, path, row_group_size=30)
+    os.utime(path, (1_000_000, 1_000_000))  # same mtime as the failed read
+    assert scan_width(str(tmp_path), "t") == 1
+
+    pq.write_table(tbl, path, row_group_size=10)
+    os.utime(path, (2_000_000, 2_000_000))
+    assert scan_width(str(tmp_path), "t") == 3

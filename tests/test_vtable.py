@@ -1357,3 +1357,51 @@ def test_log_checkpoint_skips_covered_json_opens(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(builtins, "open", counting_open)
     assert len(t._versions()) == 11
     assert opened == []  # all 11 manifests came from the checkpoint
+
+
+def test_detail_num_rows_from_log_after_every_writer(spark, tmp_path, monkeypatch):
+    """Each commit records the row count of every unit it adds (parquet
+    footers, no Spark job), carried forward with the unit: the summed
+    ``detail()["num_rows"]`` equals a full count after every writer and
+    is unknown (None) while a merge-on-read delete is pending."""
+    import pyarrow.parquet as pq
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+
+    def check(tbl=t):
+        assert tbl.detail()["num_rows"] == tbl.read().count()
+
+    rows = [{"id": i, "p": i % 4, "v": float(i)} for i in range(40)]
+    t.write(_mk(spark, rows), mode="overwrite", partition_by=["p"])
+    check()
+    more = [{"id": 100 + i, "p": i % 5, "v": 1.0} for i in range(10)]
+    t.write(_mk(spark, more), mode="append")
+    check()
+    t.merge(_mk(spark, [{"id": 1, "p": 1, "v": -1.0}, {"id": 200, "p": 2, "v": 2.0}]), keys=["id"])
+    check()
+    t.update({"v": "v * 2"}, condition="p = 3")
+    check()
+    t.delete("id < 5")
+    check()
+    t.replace_where(_mk(spark, [{"id": 300, "p": 0, "v": 0.0}]), "p = 0")
+    check()
+    t.compact()
+    check()
+    t.restore(1)
+    check()
+    c = t.clone(str(tmp_path / "c"))
+    check(c)
+    t.delete("id > 30", mode="merge-on-read")
+    assert t.detail()["num_rows"] is None
+    t.compact()
+    check()
+
+    u = VersionedTable(spark, str(tmp_path / "u"))
+    u.write(_mk(spark, rows).repartition(3), mode="overwrite")
+    u.write(_mk(spark, more), mode="append")
+
+    def no_footers(*a, **kw):
+        raise AssertionError("detail() must not read footers")
+
+    monkeypatch.setattr(pq, "read_metadata", no_footers)
+    assert u.detail()["num_rows"] == 50
