@@ -99,14 +99,8 @@ class DQMetricsStore(_StagedTable):
     def stage(self, run_id: str, layer: str, results: list[CheckResult]) -> None:
         self.pending += [Row(**r.as_row(run_id, layer)) for r in results]
 
-    def record(
-        self, run_id: str | None = None, layer: str | None = None,
-        results: list[CheckResult] | None = None,
-    ) -> None:
-        """Append the staged rows, plus ``results`` for ``run_id`` and
-        ``layer`` when given, in one commit."""
-        if results:
-            self.stage(run_id, layer, results)
+    def record(self) -> None:
+        """Append the staged rows in one commit."""
         self._append()
 
     def commit(self) -> None:
@@ -174,11 +168,8 @@ class AuditLog(_StagedTable):
             )
         )
 
-    def log_run(self, *run, **fields) -> None:
-        """Append the staged run rows, plus one built from the
-        :meth:`stage` arguments when given, in one commit."""
-        if run or fields:
-            self.stage(*run, **fields)
+    def log_run(self) -> None:
+        """Append the staged run rows in one commit."""
         self._append()
 
     def commit(self) -> None:

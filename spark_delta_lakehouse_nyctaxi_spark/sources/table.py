@@ -1744,7 +1744,8 @@ class VersionedTable:
 
     def restore(self, version: int) -> VersionInfo:
         """Restore an earlier version as a NEW version (history kept —
-        utils/delta_ops.py:167-204 semantics)."""
+        utils/delta_ops.py:167-204 semantics), with that version's
+        per-unit skipping stats, bloom filters and row counts."""
         target = self._resolve(version)
         for attempt in range(10):
             xtra: dict = {"restored_from": version}
@@ -1787,7 +1788,8 @@ class VersionedTable:
         vacuumed, compacted, or deleted without touching the other —
         the inodes survive until the last link drops.  The clone
         starts at version 0 with the snapshot's units, partitioning,
-        skipping stats, and pending rename mapping; pending
+        per-unit skipping stats, bloom filters and row counts, and
+        pending rename mapping; pending
         merge-on-read tombstones are carried too (they reference the
         cloned units by identical relative paths).  CHECK constraints
         and generated columns are copied — they are table metadata, not

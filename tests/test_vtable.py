@@ -1363,7 +1363,8 @@ def test_detail_num_rows_from_log_after_every_writer(spark, tmp_path, monkeypatc
     """Each commit records the row count of every unit it adds (parquet
     footers, no Spark job), carried forward with the unit: the summed
     ``detail()["num_rows"]`` equals a full count after every writer and
-    is unknown (None) while a merge-on-read delete is pending."""
+    is unknown (None) while a merge-on-read delete is pending. Restore
+    and clone carry the bloom filters with the counts."""
     import pyarrow.parquet as pq
 
     t = VersionedTable(spark, str(tmp_path / "t"))
@@ -1372,11 +1373,13 @@ def test_detail_num_rows_from_log_after_every_writer(spark, tmp_path, monkeypatc
         assert tbl.detail()["num_rows"] == tbl.read().count()
 
     rows = [{"id": i, "p": i % 4, "v": float(i)} for i in range(40)]
-    t.write(_mk(spark, rows), mode="overwrite", partition_by=["p"])
+    t.write(_mk(spark, rows), mode="overwrite", partition_by=["p"], bloom_cols=["id"])
     check()
     more = [{"id": 100 + i, "p": i % 5, "v": 1.0} for i in range(10)]
     t.write(_mk(spark, more), mode="append")
     check()
+    blooms_v1 = t.detail()["units_with_blooms"]
+    assert blooms_v1 == t.detail()["num_units"] > 0
     t.merge(_mk(spark, [{"id": 1, "p": 1, "v": -1.0}, {"id": 200, "p": 2, "v": 2.0}]), keys=["id"])
     check()
     t.update({"v": "v * 2"}, condition="p = 3")
@@ -1389,8 +1392,10 @@ def test_detail_num_rows_from_log_after_every_writer(spark, tmp_path, monkeypatc
     check()
     t.restore(1)
     check()
+    assert t.detail()["units_with_blooms"] == blooms_v1
     c = t.clone(str(tmp_path / "c"))
     check(c)
+    assert c.detail()["units_with_blooms"] == blooms_v1
     t.delete("id > 30", mode="merge-on-read")
     assert t.detail()["num_rows"] is None
     t.compact()
