@@ -635,9 +635,11 @@ def jaccard_pairs_adaptive(
     shingles (guide §1.2 "don't compute things you throw away", §5
     caching-for-reuse).  localCheckpoint(eager) rather than persist():
     consumers read materialized blocks, nothing leaks into a
-    long-lived session (blocks free when the frame is GC'd — round-2
-    ADVICE), and the budget count() below doubles as the barrier the
-    old code paid a separate upstream execution for.  At 100 TB this
+    long-lived session (the blocks, or with a checkpoint dir the
+    checkpoint files, are cleaned once the frame is GC'd: session.py
+    turns on checkpoint cleanup), and the budget count() below
+    doubles as the barrier the old code paid a separate upstream
+    execution for.  At 100 TB this
     IS a checkpoint to cluster storage: reliable_checkpoint switches
     to fault-tolerant ``checkpoint()`` whenever the session has a
     checkpoint dir configured (executor loss cannot strand the
@@ -931,10 +933,12 @@ def duplicate_clusters(
     # cost on q_training_pipeline at sf0.1; guide §2.4 "remove
     # shuffles outright" / §5 caching-for-reuse). A checkpoint
     # rather than persist: it also truncates the lineage so the
-    # per-iteration loop below replans against a leaf, and blocks free
-    # when the frame is GC'd (repo-wide policy); reliable_checkpoint
-    # uses cluster storage when a checkpoint dir is configured, so
-    # executor loss can't strand the job at scale.
+    # per-iteration loop below replans against a leaf, and its storage
+    # is cleaned once the frame is GC'd (localCheckpoint blocks always;
+    # reliable checkpoint files because session.py enables checkpoint
+    # cleanup); reliable_checkpoint uses cluster storage when a
+    # checkpoint dir is configured, so executor loss can't strand the
+    # job at scale.
     fwd = reliable_checkpoint(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
         eager=True,
@@ -1079,11 +1083,21 @@ def duplicate_clusters(
             f"contracted distances, so this needs ~log2(diameter) rounds)"
         )
     # Star forest: every edge is (member, component-min); centers are
-    # exactly the dst side.  Labels = members' edges + (center, center).
+    # exactly the dst side.  Labels = members' edges + (center, center),
+    # plus (x, x) for a node seen only in self-loops, which the
+    # canonical edge set dropped and union-find labels as its own
+    # cluster.
     centers = e.select(F.col("v").alias("id")).distinct()
     labels = e.select(F.col("u").alias("id"), F.col("v").alias("cluster_id")).union(
         centers.select("id", F.col("id").alias("cluster_id"))
     )
+    loners = (
+        fwd.filter(F.col("src") == F.col("dst"))
+        .select(F.col("src").alias("id"))
+        .distinct()
+        .join(labels, "id", "left_anti")
+    )
+    labels = labels.union(loners.select("id", F.col("id").alias("cluster_id")))
     return reliable_checkpoint(labels, eager=True)
 
 

@@ -908,15 +908,14 @@ def base_index_table(spark: SparkSession, sf_dir: str):
     t = VersionedTable(
         spark, os.path.join(_SUBSTR_INDEX_ROOT, f"{name}-cut{cut}")
     )
-    stored = (
-        (t.history(limit=1) or [{}])[0].get("extra", {}).get("base_fingerprint")
-        if t.exists()
-        else None
-    )
-    if not t.exists() or stored is None:
-        # fresh build, or a pre-fingerprint (round-10) artifact — the
-        # legacy case rebuilds once and stamps, since unverifiable
-        # content must never feed an incremental merge
+    head = (t.history(limit=1) or [{}])[0].get("extra", {}) if t.exists() else {}
+    # an artifact whose manifest logs no schema predates the logged
+    # table schema and cannot be read: treat it as unstamped
+    stored = head.get("base_fingerprint") if "schema" in head else None
+    if stored is None:
+        # fresh build, or a pre-fingerprint (round-10) or pre-schema
+        # artifact — the legacy cases rebuild once and stamp, since
+        # unverifiable content must never feed an incremental merge
         base_dl = position_dup_lens(spark, sf_dir, f"doc_id < {cut}")
         t.write(
             base_dl,

@@ -44,6 +44,11 @@ def get_spark(
         # ~18% on the minhash pipeline at sf0.1).
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # reliable checkpoint files (operators/checkpoint.py) are
+        # deleted when their frame is garbage-collected, like the
+        # localCheckpoint blocks they stand in for; Spark keeps them
+        # forever by default
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )

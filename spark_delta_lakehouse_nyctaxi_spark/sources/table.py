@@ -23,7 +23,21 @@ Delta's partition-pruned MERGE provides. Appending 1 GB to a 100 TB
 table writes 1 GB.
 
 The version log is tiny driver-side JSON metadata (like Delta's
-transaction log); all data movement is Spark jobs.
+transaction log); all data movement is Spark jobs. Each manifest is
+the single source of its snapshot's metadata, in ``extra``:
+
+- table properties, carried by every commit unless it changes them:
+  ``schema`` (the physical schema as ``StructType.json()``, data
+  columns then partition columns, as Delta's ``metaData.schemaString``),
+  ``stats_cols`` and ``bloom_cols`` (the skipping columns every unit
+  is statted and bloomed for) and ``column_map`` (a pending rename);
+- per-unit entries, carried with the unit: ``rows``, ``stats`` and
+  ``blooms`` (Delta's per-file ``numRecords`` and stats);
+- pending merge-on-read tombstones (``mor_deletes``), each scoped to
+  the units it applies to.
+
+Reads go through the logged schema — never inferred from the data —
+so their cost does not grow with history.
 
 Concurrency follows Delta's optimistic protocol: a commit is a
 put-if-absent of ``<version>.json`` (``os.link`` — atomic on POSIX,
@@ -37,6 +51,7 @@ Delta's conflict-detection semantics.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -46,6 +61,18 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+
+def _nullable(t):
+    """``t`` with every field nullable, as the parquet reader reports it."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType)) for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType))
+    return t
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -228,17 +255,20 @@ class VersionedTable:
 
         The manifest records the row count of every live unit (Delta's
         per-file ``numRecords``): units carried from the previous
-        snapshot bring theirs; the units this commit adds (and any unit
-        a manifest from before recorded counts left out) are counted
+        snapshot bring theirs; the units this commit adds are counted
         here from their parquet footers, by the committing process, with
-        no Spark job."""
+        no Spark job. The added units are also statted and bloomed here
+        for the table's skipping columns (:meth:`_collect_skipping`), so
+        no writer can commit a unit without them."""
         known = info.extra.get("rows", {})
-        counted = self._footer_rows([u for u in info.units if u not in known])
+        added = [u for u in info.units if u not in known]
+        counted = self._footer_rows(added)
         info.extra["rows"] = {
             u: known[u] if u in known else counted[u]
             for u in info.units
             if u in known or u in counted
         }
+        self._collect_skipping(info, added)
         os.makedirs(self._vlog, exist_ok=True)
         tmp = os.path.join(self._vlog, f".{uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as f:
@@ -259,6 +289,41 @@ class VersionedTable:
                 self.checkpoint()
             except Exception:
                 pass
+
+    def _next(
+        self,
+        info: VersionInfo,
+        operation: str,
+        mode: str | None,
+        carried: list[str],
+        new_units: list[str],
+        extra: dict,
+        tombstone: str | None = None,
+    ) -> VersionInfo:
+        """Commit the version after ``info``, keeping its ``carried``
+        units by reference with their metadata (:meth:`_carry`; entries
+        in ``extra`` override its properties) and adding ``new_units``.
+        With ``tombstone``, the predicate also commits as a merge-on-read
+        delete scoped to all of ``info``'s units. The version is pinned:
+        the caller derived its data from ``info``, so a concurrent
+        commit in between must raise :class:`ConcurrentWriteError`, not
+        be silently overwritten."""
+        xtra = {**self._carry(info, carried), **extra}
+        if tombstone is not None:
+            xtra["mor_deletes"] = xtra.get("mor_deletes", []) + [
+                {"pred": tombstone, "units": list(info.units)}
+            ]
+        vinfo = VersionInfo(
+            version=info.version + 1,
+            timestamp=time.time(),
+            operation=operation,
+            mode=mode,
+            units=carried + new_units,
+            partition_by=list(info.partition_by),
+            extra=xtra,
+        )
+        self._commit(vinfo)
+        return vinfo
 
     def _resolve(self, version: int | None = None, timestamp: float | None = None) -> VersionInfo:
         vs = self._versions()
@@ -369,8 +434,8 @@ class VersionedTable:
         mapping is pending (write-path evaluation binds physical
         names, same argument as add_constraint)."""
         if self.exists():
-            self._require_no_column_map("add_column_default")
-            probe = self.read()
+            info = self._require_no_column_map("add_column_default")
+            probe = self.spark.createDataFrame([], self._schema(info))
             if name not in probe.columns:
                 raise ValueError(
                     f"column {name!r} does not exist; defaults attach to "
@@ -536,9 +601,8 @@ class VersionedTable:
         on physical names, so an expression validated against the
         logical view would mis-bind after :meth:`_to_physical`."""
         if self.exists():
-            self._require_no_column_map("add_generated_column")
-            cols = self.read().columns
-            if name not in cols:
+            info = self._require_no_column_map("add_generated_column")
+            if name not in self._schema(info).fieldNames():
                 raise ValueError(
                     f"column {name!r} does not exist; backfill it (e.g. "
                     "rewrite with the expression) before registering"
@@ -599,6 +663,19 @@ class VersionedTable:
 
     # ----------------------------------------------------------- write
 
+    @staticmethod
+    def _as_logged(df: DataFrame, schema: StructType) -> DataFrame:
+        """``df`` with every column whose type differs from the logged
+        ``schema`` cast to the logged type, so all units of a snapshot
+        store the same types (Delta casts writes to the table schema)."""
+        types = {f.name: f.dataType for f in schema.fields}
+        casts = {
+            f.name: F.col(f.name).cast(types[f.name])
+            for f in df.schema.fields
+            if f.name in types and _nullable(f.dataType) != types[f.name]
+        }
+        return df.withColumns(casts) if casts else df
+
     def _write_units(self, df: DataFrame, partition_by: list[str] | None) -> list[str]:
         """Write one commit dir; return its data units (partition
         subdirs when partitioned, else the commit dir)."""
@@ -648,20 +725,22 @@ class VersionedTable:
                 pass
         return out
 
+    #: table properties, carried by every commit unless it changes them
+    _PROPS = ("schema", "stats_cols", "bloom_cols", "column_map")
     #: manifest entries keyed by unit, valid for as long as the unit is
     #: live: skipping stats, bloom filters and row counts
     _PER_UNIT = ("stats", "blooms", "rows")
 
     @classmethod
     def _carry(cls, info: VersionInfo, carried: list[str]) -> dict:
-        """The per-unit metadata and pending merge-on-read tombstones of
-        the units a rewrite carries over by reference. Carried units are
-        byte-identical, so their entries stay valid verbatim; rewritten
-        units drop theirs (stats-less units are always scanned) and the
-        tombstones stay scoped to the carried units, whose deleted rows
-        were not materialized."""
+        """The table properties of ``info``, plus the per-unit metadata
+        and pending merge-on-read tombstones of the units a commit
+        carries over by reference. Carried units are byte-identical, so
+        their entries stay valid verbatim; the tombstones stay scoped to
+        the carried units, whose deleted rows were not materialized.
+        The units a commit adds get theirs in :meth:`_commit`."""
         keep = set(carried)
-        xtra: dict = {}
+        xtra = {k: info.extra[k] for k in cls._PROPS if k in info.extra}
         for k in cls._PER_UNIT:
             sub = {u: v for u, v in info.extra.get(k, {}).items() if u in keep}
             if sub:
@@ -674,6 +753,56 @@ class VersionedTable:
         if mor:
             xtra["mor_deletes"] = mor
         return xtra
+
+    def _schema(self, info: VersionInfo) -> StructType:
+        """The physical schema ``info`` logged. There is no inference
+        fallback: a manifest without one predates the logged schema."""
+        if "schema" not in info.extra:
+            raise ValueError(
+                f"table at {self.path}: version {info.version} logs no "
+                "schema (it was written before manifests carried one); "
+                "rewrite the table with write(mode='overwrite')"
+            )
+        return StructType.fromJson(json.loads(info.extra["schema"]))
+
+    def _props(
+        self,
+        head: VersionInfo | None,
+        schema: StructType,
+        partition_by: list[str] | None,
+        stats_cols: list[str] | None,
+        bloom_cols: list[str] | None,
+    ) -> dict:
+        """The table properties a write commits. An overwrite (no
+        ``head``) takes the frame's ``schema`` and the given skipping
+        columns; an append (or a compaction) extends ``head``'s: columns
+        the frame adds (``merge_schema``) follow the logged data columns,
+        and the given skipping columns join the logged ones. The schema
+        is in the parquet reader's order — data columns, then
+        ``partition_by`` — with every field nullable, as the reader
+        reports it; skipping columns outside it are dropped."""
+        fields = list(self._schema(head).fields) if head else []
+        have = {f.name for f in fields}
+        fields += [
+            StructField(f.name, _nullable(f.dataType))
+            for f in schema.fields
+            if f.name not in have
+        ]
+        parts = list(partition_by or [])
+        fields = [f for f in fields if f.name not in parts] + [
+            f for p in parts for f in fields if f.name == p
+        ]
+        names = {f.name for f in fields}
+
+        def cols(key: str, given: list[str] | None) -> list[str]:
+            logged = head.extra.get(key, []) if head else []
+            return [c for c in dict.fromkeys([*logged, *(given or [])]) if c in names]
+
+        return {
+            "schema": StructType(fields).json(),
+            "stats_cols": cols("stats_cols", stats_cols),
+            "bloom_cols": cols("bloom_cols", bloom_cols),
+        }
 
     @staticmethod
     def _jsonable(v):
@@ -693,135 +822,90 @@ class VersionedTable:
             return float(v)
         return str(v)
 
-    def _collect_stats(
-        self, new_units: list[str], stats_cols: list[str], partitioned: bool
-    ) -> dict:
-        """Per-unit min/max/null-count for ``stats_cols`` — the
-        VersionedTable analog of Delta's per-file stats in the
-        transaction log. ONE Spark job for the whole commit: group by
-        the file's directory (a unit holds its part-files directly, so
-        leaf dir == unit), aggregate min/max/nulls per column; the
-        result is metadata-sized (one row per unit). Directory strings
-        are matched back to unit paths on the driver via the same
-        unquote(urlparse(...)) decoding the DELETE path uses — never by
-        re-encoding partition values."""
-        from urllib.parse import unquote, urlparse
-
-        if not new_units:
-            return {}
-        roots = sorted({u.split("/", 1)[0] for u in new_units})
-        rows = []
-        for root in roots:
-            base = os.path.join(self._data, root)
-            reader = self.spark.read
-            if partitioned:
-                reader = reader.option("basePath", base)
-            df = reader.parquet(base)
-            have = [c for c in stats_cols if c in df.columns]
-            if not have:
-                continue
-            rows += (
-                df.groupBy(
-                    F.regexp_replace(F.input_file_name(), "/[^/]*$", "").alias("_dir")
-                )
-                .agg(*[a for c in have for a in (
-                    F.min(c).alias(f"min__{c}"),
-                    F.max(c).alias(f"max__{c}"),
-                    F.sum(F.col(c).isNull().cast("long")).alias(f"nulls__{c}"),
-                )])
-                .collect()
-            )
-        by_dir = {unquote(urlparse(r["_dir"]).path): r for r in rows}
-        stats = {}
-        for u in new_units:
-            abs_u = os.path.abspath(os.path.join(self._data, u))
-            r = by_dir.get(abs_u)
-            if r is None:
-                continue
-            stats[u] = {
-                c: {
-                    "min": self._jsonable(r[f"min__{c}"]),
-                    "max": self._jsonable(r[f"max__{c}"]),
-                    "nulls": r[f"nulls__{c}"],
-                }
-                for c in stats_cols
-                if f"min__{c}" in r.asDict()
-            }
-        return stats
-
     # Bloom filter parameters: m bits / k hashes sized for ~500 distinct
     # values per unit at ~1% false-positive rate; a false positive only
     # costs reading a unit that range stats alone would have read anyway.
     _BLOOM_M, _BLOOM_K = 4096, 5
 
-    def _collect_blooms(
-        self, new_units: list[str], bloom_cols: list[str], partitioned: bool
-    ) -> dict:
-        """Per-unit bloom filters for equality skipping (the Delta/
-        Parquet bloom-filter-index analog, kept in the manifest like
-        stats). ONE Spark job per column: every non-null value hashes to
-        k = 5 positions in an m = 4096-bit set via JVM xxhash64 (seeded
-        0..k-1 — engine-stable), positions deduplicate distributed, and
-        only the ≤ m distinct positions per unit reach the driver, which
-        packs them into a hex-encoded bitset."""
+    def _collect_skipping(self, info: VersionInfo, units: list[str]) -> None:
+        """Add the skipping metadata of ``units`` — the units a commit
+        adds — to ``info.extra``, for the table's logged ``stats_cols``
+        and ``bloom_cols``:
+
+        - stats (Delta's per-file stats in the log): min/max/null count
+          per column in ONE Spark job for all units, grouped by the
+          file's directory (a unit holds its part-files directly, so
+          leaf dir == unit); one row per unit reaches the driver;
+        - bloom filters (the Delta/Parquet bloom-filter-index analog):
+          ONE Spark job per column; every non-null value hashes to k = 5
+          positions in an m = 4096-bit set via JVM xxhash64 (seeded
+          0..k-1, engine-stable), positions deduplicate distributed, and
+          only the ≤ m distinct positions per unit reach the driver,
+          which packs them into a hex-encoded bitset.
+
+        Directory strings are matched back to units via the same
+        unquote(urlparse(...)) decoding the DELETE path uses — never by
+        re-encoding partition values."""
         from urllib.parse import unquote, urlparse
 
-        if not new_units:
-            return {}
+        stats_cols = info.extra.get("stats_cols", [])
+        bloom_cols = info.extra.get("bloom_cols", [])
+        if not units or not (stats_cols or bloom_cols):
+            return
         m, k = self._BLOOM_M, self._BLOOM_K
-        roots = sorted({u.split("/", 1)[0] for u in new_units})
-        by_dir_col: dict[tuple[str, str], set[int]] = {}
-        for root in roots:
-            base = os.path.join(self._data, root)
-            reader = self.spark.read
-            if partitioned:
-                reader = reader.option("basePath", base)
-            df = reader.parquet(base)
-            for c in bloom_cols:
-                if c not in df.columns:
-                    continue
-                # hash the CANONICAL STRING form: xxhash64 is type-
-                # sensitive and the probe side builds values from
-                # literals whose Spark type (int) can differ from the
-                # column's (bigint) — strings make build and probe agree
-                # for every primitive type
-                pos = F.array(
-                    *[
-                        F.pmod(
-                            F.xxhash64(F.col(c).cast("string"), F.lit(i)),
-                            F.lit(m),
-                        ).cast("int")
-                        for i in range(k)
-                    ]
+        stats = info.extra.setdefault("stats", {})
+        blooms = info.extra.setdefault("blooms", {})
+        df = self._read_units(info, units)
+        unit_of = {os.path.abspath(os.path.join(self._data, u)): u for u in units}
+        d = F.regexp_replace(F.input_file_name(), "/[^/]*$", "").alias("_dir")
+
+        def unit(r) -> str | None:
+            return unit_of.get(unquote(urlparse(r["_dir"]).path))
+
+        if stats_cols:
+            aggs = [
+                a
+                for i, c in enumerate(stats_cols)
+                for a in (
+                    F.min(c).alias(f"min{i}"),
+                    F.max(c).alias(f"max{i}"),
+                    F.sum(F.col(c).isNull().cast("long")).alias(f"nulls{i}"),
                 )
-                rows = (
-                    df.filter(F.col(c).isNotNull())
-                    .select(
-                        F.regexp_replace(
-                            F.input_file_name(), "/[^/]*$", ""
-                        ).alias("_dir"),
-                        F.explode(pos).alias("p"),
-                    )
-                    .distinct()
-                    .groupBy("_dir")
-                    .agg(F.collect_set("p").alias("ps"))
-                    .collect()
-                )
-                for r in rows:
-                    d = unquote(urlparse(r["_dir"]).path)
-                    by_dir_col.setdefault((d, c), set()).update(r["ps"])
-        blooms: dict = {}
-        for u in new_units:
-            abs_u = os.path.abspath(os.path.join(self._data, u))
-            for c in bloom_cols:
-                bits = by_dir_col.get((abs_u, c))
-                if bits is None:
-                    continue
-                arr = bytearray(m // 8)
-                for p in bits:
-                    arr[p >> 3] |= 1 << (p & 7)
-                blooms.setdefault(u, {})[c] = bytes(arr).hex()
-        return blooms
+            ]
+            for r in df.groupBy(d).agg(*aggs).collect():
+                if (u := unit(r)) is not None:
+                    stats[u] = {
+                        c: {
+                            "min": self._jsonable(r[f"min{i}"]),
+                            "max": self._jsonable(r[f"max{i}"]),
+                            "nulls": r[f"nulls{i}"],
+                        }
+                        for i, c in enumerate(stats_cols)
+                    }
+        for c in bloom_cols:
+            # hash the CANONICAL STRING form: xxhash64 is type-sensitive
+            # and the probe side builds values from literals whose Spark
+            # type (int) can differ from the column's (bigint) — strings
+            # make build and probe agree for every primitive type
+            pos = F.array(
+                *[
+                    F.pmod(F.xxhash64(F.col(c).cast("string"), F.lit(i)), F.lit(m)).cast("int")
+                    for i in range(k)
+                ]
+            )
+            for r in (
+                df.filter(F.col(c).isNotNull())
+                .select(d, F.explode(pos).alias("p"))
+                .distinct()
+                .groupBy("_dir")
+                .agg(F.collect_set("p").alias("ps"))
+                .collect()
+            ):
+                if (u := unit(r)) is not None:
+                    arr = bytearray(m // 8)
+                    for p in r["ps"]:
+                        arr[p >> 3] |= 1 << (p & 7)
+                    blooms.setdefault(u, {})[c] = bytes(arr).hex()
 
     def _bloom_probe_positions(
         self, eq: dict, schema=None
@@ -872,14 +956,21 @@ class VersionedTable:
         """Reference parity: write_*_delta (etl/bronze_job.py:60-91) —
         modes overwrite/append, optional partitionBy.
 
-        Schema evolution follows Delta semantics: an append whose
-        column set differs from the table's is rejected unless
-        ``merge_schema=True`` (Delta's ``mergeSchema`` option), in
-        which case added columns read back as nulls on old rows and
-        dropped columns as nulls on new ones (the storage layer
-        reconciles by name at read time). Overwrite always replaces
-        the schema (the reference sets overwriteSchema=true
-        unconditionally, etl/bronze_job.py:78)."""
+        The table's schema is the one the version log records (Delta's
+        ``metaData.schemaString``), and an append enforces it: a frame
+        whose column set differs is rejected unless
+        ``merge_schema=True`` (Delta's ``mergeSchema`` option), which
+        adds the frame's new columns to the logged schema — they read
+        back as nulls on old rows, and logged columns the frame lacks
+        read back as nulls on its rows — and every column is cast to its
+        logged type before it is written. Overwrite always replaces the
+        schema (the reference sets overwriteSchema=true unconditionally,
+        etl/bronze_job.py:78). Partition columns read back with the type
+        they were written with, as in Delta, not one inferred from the
+        directory names. ``stats_cols`` and ``bloom_cols`` set the
+        table's skipping columns on overwrite and extend them on
+        append; every writer stats and blooms the units it adds for
+        them."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"unsupported mode {mode!r}")
         # compute missing default + generated columns BEFORE the append
@@ -897,9 +988,11 @@ class VersionedTable:
             else:
                 df = self._assign_identity(df, name, spec)
         prev = self._versions()
-        if mode == "append" and prev:
-            partition_by = partition_by or prev[-1].partition_by
-            existing = set(self.read().columns)
+        head = prev[-1] if mode == "append" and prev else None
+        if head is not None:
+            partition_by = partition_by or head.partition_by
+            m = self._column_map_of(head)
+            existing = {m.get(f.name, f.name) for f in self._schema(head).fields}
             if set(df.columns) != existing and not merge_schema:
                 added = sorted(set(df.columns) - existing)
                 missing = sorted(existing - set(df.columns))
@@ -909,57 +1002,27 @@ class VersionedTable:
                 )
             # appended frames arrive under LOGICAL names; files store
             # physical ones so all units stay name-uniform
-            df = self._to_physical(df, prev[-1])
-            if stats_cols:
-                inv = {l: p for p, l in self._column_map_of(prev[-1]).items()}
-                stats_cols = [inv.get(c, c) for c in stats_cols]
+            df = self._as_logged(self._to_physical(df, head), self._schema(head))
+            inv = {l: p for p, l in m.items()}
+            stats_cols = [inv.get(c, c) for c in stats_cols or []]
+            bloom_cols = [inv.get(c, c) for c in bloom_cols or []]
         self._check_constraints(df, f"write({mode})")
+        props = self._props(head, df.schema, partition_by, stats_cols, bloom_cols)
         new_units = self._write_units(df, partition_by)
-        new_stats = (
-            self._collect_stats(new_units, stats_cols, bool(partition_by))
-            if stats_cols
-            else {}
-        )
-        if mode == "append" and prev and bloom_cols is None:
-            # appends inherit the table's bloom columns (like stats,
-            # skipping metadata must not silently stop at a commit)
-            prev_blooms = prev[-1].extra.get("blooms", {})
-            inherited = sorted({c for b in prev_blooms.values() for c in b})
-            bloom_cols = inherited or None
-        new_blooms = (
-            self._collect_blooms(new_units, bloom_cols, bool(partition_by))
-            if bloom_cols
-            else {}
-        )
         # Optimistic commit: the data units above are immutable and
         # uuid-named, so on a version conflict only the manifest needs
         # rebuilding against the refreshed snapshot (blind writes
-        # rebase; appends pick up the winner's units).
+        # rebase; appends pick up the winner's units and properties).
         for attempt in range(10):
-            units = new_units
-            stats = new_stats
-            blooms = new_blooms
-            if mode == "append" and prev:
-                units = prev[-1].units + new_units
-                # Carry the carried units' stats: skipping metadata is
-                # per-unit and units are immutable, so prior stats stay
-                # valid verbatim. Units with no stats simply never skip.
-                stats = {**prev[-1].extra.get("stats", {}), **new_stats}
-                blooms = {**prev[-1].extra.get("blooms", {}), **new_blooms}
             xtra = dict(extra or {})
-            if mode == "append" and prev and prev[-1].extra.get("rows"):
-                xtra["rows"] = prev[-1].extra["rows"]
-            if mode == "append" and prev and prev[-1].extra.get("mor_deletes"):
-                # pending merge-on-read tombstones stay scoped to the
-                # pre-append units; the appended rows are never filtered
-                xtra["mor_deletes"] = prev[-1].extra["mor_deletes"]
-            if mode == "append" and prev and prev[-1].extra.get("column_map"):
-                # a pending metadata-only rename survives appends
-                xtra["column_map"] = prev[-1].extra["column_map"]
-            if stats:
-                xtra["stats"] = stats
-            if blooms:
-                xtra["blooms"] = blooms
+            units = new_units
+            if head is not None:
+                # carried units keep their metadata, and pending
+                # merge-on-read tombstones stay scoped to them: the
+                # appended rows are never filtered
+                xtra.update(self._carry(head, head.units))
+                units = head.units + new_units
+            xtra.update(props)
             info = VersionInfo(
                 version=(prev[-1].version + 1 if prev else 0),
                 timestamp=time.time(),
@@ -976,29 +1039,39 @@ class VersionedTable:
                 if attempt == 9:
                     raise
                 prev = self._versions()
+                head = prev[-1] if mode == "append" and prev else None
+                props = self._props(head, df.schema, partition_by, stats_cols, bloom_cols)
 
     # ------------------------------------------------------------ read
 
-    def _read_units(self, units: list[str], partitioned: bool) -> DataFrame:
-        if not partitioned:
-            dfs = [self.spark.read.parquet(os.path.join(self._data, u)) for u in units]
-        else:
-            # Group units by commit root so basePath restores the
-            # partition columns encoded in key=value paths.
-            by_root: dict[str, list[str]] = {}
-            for u in units:
-                root = u.split("/", 1)[0]
-                by_root.setdefault(root, []).append(u)
-            dfs = [
-                self.spark.read.option("basePath", os.path.join(self._data, root)).parquet(
-                    *[os.path.join(self._data, u) for u in us]
-                )
+    def _read_units(self, info: VersionInfo, units: list[str]) -> DataFrame:
+        """Read ``units`` of ``info`` through its logged schema, never
+        inferring one from the data: one multi-path read when
+        unpartitioned; when partitioned, one read per commit root (its
+        ``basePath`` restores the key=value columns, and Spark refuses
+        one partitioned read across roots), unioned over the identical
+        schema. Partition columns read back with their logged type, a
+        unit that lacks a column null-fills it, and no units read as an
+        empty frame of the schema."""
+        schema = self._schema(info)
+        if not units:
+            return self.spark.createDataFrame([], schema)
+        if not info.partition_by:
+            return self.spark.read.schema(schema).parquet(
+                *[os.path.join(self._data, u) for u in units]
+            )
+        by_root: dict[str, list[str]] = {}
+        for u in units:
+            by_root.setdefault(u.split("/", 1)[0], []).append(u)
+        return functools.reduce(
+            DataFrame.union,
+            [
+                self.spark.read.schema(schema)
+                .option("basePath", os.path.join(self._data, root))
+                .parquet(*[os.path.join(self._data, u) for u in us])
                 for root, us in by_root.items()
-            ]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+            ],
+        )
 
     def _read_with_deletes(self, info: VersionInfo, units: list[str]) -> DataFrame:
         """Read ``units`` applying any pending merge-on-read delete
@@ -1009,23 +1082,19 @@ class VersionedTable:
         ``NOT coalesce(pred, false)`` — NULL-evaluating rows survive,
         Delta DELETE semantics); groups union back together."""
         mor = info.extra.get("mor_deletes", [])
-        partitioned = bool(info.partition_by)
-        if not mor:
-            return self._read_units(units, partitioned)
+        if not mor or not units:
+            return self._read_units(info, units)
         groups: dict[tuple[int, ...], list[str]] = {}
         for u in units:
             key = tuple(i for i, d in enumerate(mor) if u in d["units"])
             groups.setdefault(key, []).append(u)
         parts = []
         for key, us in groups.items():
-            df = self._read_units(us, partitioned)
+            df = self._read_units(info, us)
             for i in key:
                 df = df.filter(F.expr(f"NOT coalesce(({mor[i]['pred']}), false)"))
             parts.append(df)
-        out = parts[0]
-        for d in parts[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out
+        return functools.reduce(DataFrame.union, parts)
 
     # ----------------------------------------------- column mapping
 
@@ -1108,7 +1177,7 @@ class VersionedTable:
                     "names; compact() before renaming"
                 )
             m = self._column_map_of(info)
-            physical = self._read_units(info.units, bool(info.partition_by)).columns
+            physical = self._schema(info).fieldNames()
             logical = [m.get(c, c) for c in physical]
             if old not in logical:
                 raise ValueError(f"no such column: {old!r} (have {logical})")
@@ -1139,7 +1208,9 @@ class VersionedTable:
                     "its allocation metadata is keyed by name — renaming "
                     "it is not supported"
                 )
-            renamed_probe = self.read().withColumnRenamed(old, new)
+            renamed_probe = self._apply_column_map(
+                self._read_units(info, []), info
+            ).withColumnRenamed(old, new)
             for gname, gexpr in gen.items():
                 try:
                     renamed_probe.select(F.expr(gexpr)).schema
@@ -1153,21 +1224,10 @@ class VersionedTable:
             m.pop(phys, None)
             if new != phys:
                 m[phys] = new
-            xtra = {k: v for k, v in info.extra.items() if k != "column_map"}
-            if m:
-                xtra["column_map"] = m
-            vinfo = VersionInfo(
-                version=info.version + 1,
-                timestamp=time.time(),
-                operation="RENAME COLUMN",
-                mode=None,
-                units=list(info.units),
-                partition_by=list(info.partition_by),
-                extra=xtra,
-            )
             try:
-                self._commit(vinfo)
-                return vinfo
+                return self._next(
+                    info, "RENAME COLUMN", None, info.units, [], {"column_map": m}
+                )
             except ConcurrentWriteError:
                 if attempt == 9:
                     raise
@@ -1210,18 +1270,14 @@ class VersionedTable:
                     "renamed column; drop_generated_column and re-add it "
                     "under the new name before materializing"
                 ) from None
-        stats_cols = None
-        if info.extra.get("stats"):
-            stats_cols = sorted(
-                {m.get(c, c) for s in info.extra["stats"].values() for c in s}
-            )
         part_logical = [m.get(p, p) for p in info.partition_by]
         return self.write(
             df,
             mode="overwrite",
             partition_by=part_logical or None,
             operation="MATERIALIZE RENAME",
-            stats_cols=stats_cols,
+            stats_cols=[m.get(c, c) for c in info.extra.get("stats_cols", [])],
+            bloom_cols=[m.get(c, c) for c in info.extra.get("bloom_cols", [])],
             _identity_supplied_ok=True,  # internal rewrite keeps ids
         )
 
@@ -1241,8 +1297,8 @@ class VersionedTable:
         A unit is skipped only when its manifest stats PROVE no row can
         match: its [min, max] is disjoint from [lo, hi], or the column
         is all-null there (range predicates never match NULL). Units
-        without stats — pre-stats commits, rewrite paths, schema-merge
-        gaps — are always kept: skipping is an optimization, never a
+        without stats for a column — added before it became a stats
+        column — are always kept: skipping is an optimization, never a
         correctness dependency."""
         stats = info.extra.get("stats", {})
         kept, skipped = [], []
@@ -1306,12 +1362,11 @@ class VersionedTable:
             range_pred.setdefault(c, (v, v))
         kept, skipped = self._prune_units(info, range_pred)
         if eq and kept:
-            # one-footer schema read so probe literals cast to the
-            # stored column types before stringifying (ADVICE r4: an
-            # int probe vs a double column rendered '7' vs '7.0' and
-            # silently skipped every matching unit)
-            stored = self._read_units(kept[:1], bool(info.partition_by)).schema
-            probes = self._bloom_probe_positions(eq, schema=stored)
+            # probe literals cast to the logged column types before
+            # stringifying (ADVICE r4: an int probe vs a double column
+            # rendered '7' vs '7.0' and silently skipped every matching
+            # unit)
+            probes = self._bloom_probe_positions(eq, schema=self._schema(info))
             blooms = info.extra.get("blooms", {})
             survivors = []
             for u in kept:
@@ -1330,13 +1385,7 @@ class VersionedTable:
                 (skipped if drop else survivors).append(u)
             kept = survivors
         self.last_scan = {"kept": len(kept), "skipped": len(skipped)}
-        if kept:
-            df = self._read_with_deletes(info, kept)
-        else:
-            # schema-correct empty frame; the lazy full-snapshot read
-            # plans partition discovery only, and the FALSE filter means
-            # no data IO ever runs
-            df = self._read_units(info.units, bool(info.partition_by)).filter(F.lit(False))
+        df = self._read_with_deletes(info, kept)
         for col, (lo, hi) in pred.items():
             if lo is not None:
                 df = df.filter(F.col(col) >= F.lit(lo))
@@ -1345,28 +1394,6 @@ class VersionedTable:
         for col, v in eq.items():
             df = df.filter(F.col(col) == F.lit(v))
         return self._apply_column_map(df, info)
-
-    def _conform_types(self, df: DataFrame) -> DataFrame:
-        """Cast NullType columns to their type in the full snapshot.
-
-        A pruned read whose only visible partition directory is
-        ``__HIVE_DEFAULT_PARTITION__`` infers the partition column as
-        VOID (there is no value in any path to infer from), which can
-        be neither rewritten partitioned nor merged. The full snapshot
-        read is lazy — only partition discovery runs, no data IO."""
-        from pyspark.sql.types import NullType
-
-        if not any(isinstance(f.dataType, NullType) for f in df.schema.fields):
-            return df
-        ref = {f.name: f.dataType for f in self.read().schema.fields}
-        return df.select(
-            *[
-                F.col(f.name).cast(ref[f.name]).alias(f.name)
-                if isinstance(f.dataType, NullType) and f.name in ref
-                else F.col(f.name)
-                for f in df.schema.fields
-            ]
-        )
 
     def delete(self, condition: str, mode: str = "copy-on-write") -> VersionInfo:
         """Delta ``DELETE WHERE`` analog.
@@ -1393,22 +1420,10 @@ class VersionedTable:
         info = self._require_no_column_map("delete")
         part_cols = info.partition_by
         if mode == "merge-on-read":
-            mor = list(info.extra.get("mor_deletes", []))
-            mor.append({"pred": condition, "units": list(info.units)})
-            xtra = {k: v for k, v in info.extra.items() if k != "mor_deletes"}
-            xtra["mor_deletes"] = mor
-            xtra["condition"] = condition
-            vinfo = VersionInfo(
-                version=info.version + 1,
-                timestamp=time.time(),
-                operation="DELETE",
-                mode="merge-on-read",
-                units=list(info.units),
-                partition_by=list(part_cols or []),
-                extra=xtra,
+            return self._next(
+                info, "DELETE", "merge-on-read", info.units, [],
+                {"condition": condition}, tombstone=condition,
             )
-            self._commit(vinfo)
-            return vinfo
         # DELETE removes rows where the condition is TRUE; rows where it
         # evaluates to NULL must SURVIVE (Delta semantics) — a bare
         # `NOT (cond)` would silently drop them.
@@ -1443,25 +1458,12 @@ class VersionedTable:
             # read THROUGH pending merge-on-read tombstones — a raw unit
             # read would resurrect previously MoR-deleted rows in the
             # rewritten partitions
-            kept = self._conform_types(
-                self._read_with_deletes(info, touched_units)
-            ).filter(keep_pred)
+            kept = self._read_with_deletes(info, touched_units).filter(keep_pred)
         else:
             carried = []
             kept = self.read().filter(keep_pred)
-        new_units = self._write_units(kept, part_cols or None)
-        xtra = {"condition": condition, **self._carry(info, carried)}
-        vinfo = VersionInfo(
-            version=info.version + 1,
-            timestamp=time.time(),
-            operation="DELETE",
-            mode=None,
-            units=carried + new_units,
-            partition_by=list(part_cols or []),
-            extra=xtra,
-        )
-        self._commit(vinfo)
-        return vinfo
+        new_units = self._write_units(kept, part_cols)
+        return self._next(info, "DELETE", None, carried, new_units, {"condition": condition})
 
     def replace_where(
         self, df: DataFrame, condition: str
@@ -1493,7 +1495,8 @@ class VersionedTable:
                     "and cannot be supplied; omit it"
                 )
             df = self._assign_identity(df, name, spec)
-        existing = set(self.read().columns)
+        schema = self._schema(info)
+        existing = set(schema.fieldNames())
         if set(df.columns) != existing:
             raise ValueError(
                 f"replace_where schema mismatch: incoming "
@@ -1524,23 +1527,13 @@ class VersionedTable:
         keep_pred = f"NOT coalesce(({condition}), false)"
         new_units: list[str] = []
         if touched:
-            kept = self._conform_types(
-                self._read_with_deletes(info, touched)
-            ).filter(keep_pred)
-            new_units += self._write_units(kept, part_cols or None)
-        new_units += self._write_units(df, part_cols or None)
-        xtra = {"condition": condition, **self._carry(info, carried)}
-        vinfo = VersionInfo(
-            version=info.version + 1,
-            timestamp=time.time(),
-            operation="REPLACE WHERE",
-            mode="overwrite",
-            units=carried + new_units,
-            partition_by=list(part_cols or []),
-            extra=xtra,
+            kept = self._read_with_deletes(info, touched).filter(keep_pred)
+            new_units += self._write_units(kept, part_cols)
+        new_units += self._write_units(self._as_logged(df, schema), part_cols)
+        return self._next(
+            info, "REPLACE WHERE", "overwrite", carried, new_units,
+            {"condition": condition},
         )
-        self._commit(vinfo)
-        return vinfo
 
     def update(
         self,
@@ -1583,24 +1576,13 @@ class VersionedTable:
                 ]
             )
             self._check_constraints(updated, "UPDATE(merge-on-read)")
-            new_units = self._write_units(updated, info.partition_by or None)
-            mor = list(info.extra.get("mor_deletes", []))
-            mor.append({"pred": condition, "units": list(info.units)})
-            xtra = {k: v for k, v in info.extra.items() if k != "mor_deletes"}
-            xtra.update(
-                {"mor_deletes": mor, "condition": condition, "set": set_exprs}
+            new_units = self._write_units(
+                self._as_logged(updated, self._schema(info)), info.partition_by
             )
-            vinfo = VersionInfo(
-                version=info.version + 1,
-                timestamp=time.time(),
-                operation="UPDATE",
-                mode="merge-on-read",
-                units=list(info.units) + new_units,
-                partition_by=list(info.partition_by or []),
-                extra=xtra,
+            return self._next(
+                info, "UPDATE", "merge-on-read", info.units, new_units,
+                {"condition": condition, "set": set_exprs}, tombstone=condition,
             )
-            self._commit(vinfo)
-            return vinfo
         cols = [
             F.when(F.expr(condition), F.expr(e)).otherwise(F.col(c)).alias(c)
             if c in set_exprs
@@ -1609,18 +1591,12 @@ class VersionedTable:
         ]
         updated = df.select(*cols)
         self._check_constraints(updated, "UPDATE")
-        new_units = self._write_units(updated, info.partition_by or None)
-        vinfo = VersionInfo(
-            version=info.version + 1,
-            timestamp=time.time(),
-            operation="UPDATE",
-            mode=None,
-            units=new_units,
-            partition_by=list(info.partition_by or []),
-            extra={"condition": condition, "set": set_exprs},
+        new_units = self._write_units(
+            self._as_logged(updated, self._schema(info)), info.partition_by
         )
-        self._commit(vinfo)
-        return vinfo
+        return self._next(
+            info, "UPDATE", None, [], new_units, {"condition": condition, "set": set_exprs}
+        )
 
     def changes(
         self,
@@ -1729,13 +1705,13 @@ class VersionedTable:
             # snapshot can skip, and whether reads pay a tombstone tax
             "num_units": len(info.units),
             "units_with_stats": len([u for u in info.units if u in stats]),
-            "stats_columns": sorted({c for s in stats.values() for c in s}),
             "units_with_blooms": len(
                 [u for u in info.units if u in info.extra.get("blooms", {})]
             ),
-            "bloom_columns": sorted(
-                {c for b in info.extra.get("blooms", {}).values() for c in b}
-            ),
+            # the table properties: logged schema and skipping columns
+            "schema": info.extra.get("schema"),
+            "stats_columns": info.extra.get("stats_cols", []),
+            "bloom_columns": info.extra.get("bloom_cols", []),
             "pending_mor_deletes": len(info.extra.get("mor_deletes", [])),
             "column_mapping": self._column_map_of(info),
         }
@@ -1744,17 +1720,15 @@ class VersionedTable:
 
     def restore(self, version: int) -> VersionInfo:
         """Restore an earlier version as a NEW version (history kept —
-        utils/delta_ops.py:167-204 semantics), with that version's
+        utils/delta_ops.py:167-204 semantics), with that version's table
+        properties (schema, skipping columns, rename mapping) and
         per-unit skipping stats, bloom filters and row counts."""
         target = self._resolve(version)
         for attempt in range(10):
-            xtra: dict = {"restored_from": version}
             # the restored snapshot's units are byte-identical, so its
-            # per-unit metadata — and any tombstones pending AT that
-            # version — come along verbatim
-            xtra.update(self._carry(target, target.units))
-            if target.extra.get("column_map"):
-                xtra["column_map"] = target.extra["column_map"]
+            # metadata — and any tombstones pending AT that version —
+            # come along verbatim
+            xtra = {"restored_from": version, **self._carry(target, target.units)}
             info = VersionInfo(
                 version=self.latest_version() + 1,
                 timestamp=time.time(),
@@ -1788,8 +1762,9 @@ class VersionedTable:
         vacuumed, compacted, or deleted without touching the other —
         the inodes survive until the last link drops.  The clone
         starts at version 0 with the snapshot's units, partitioning,
-        per-unit skipping stats, bloom filters and row counts, and
-        pending rename mapping; pending
+        table properties (schema, skipping columns, pending rename
+        mapping) and per-unit skipping stats, bloom filters and row
+        counts; pending
         merge-on-read tombstones are carried too (they reference the
         cloned units by identical relative paths).  CHECK constraints
         and generated columns are copied — they are table metadata, not
@@ -1825,9 +1800,7 @@ class VersionedTable:
             # defaults carry no data invariant (they apply to FUTURE
             # writes) — drop only those that no longer analyze against
             # the snapshot schema
-            snap0 = self._apply_column_map(
-                self._read_with_deletes(src, src.units), src
-            )
+            snap0 = self._apply_column_map(self._read_units(src, []), src)
             for name, expr in list(dfl.items()):
                 try:
                     snap0.select(F.expr(expr)).schema
@@ -1878,8 +1851,6 @@ class VersionedTable:
         if dropped:
             xtra["dropped_metadata"] = sorted(dropped)
         xtra.update(self._carry(src, src.units))
-        if src.extra.get("column_map"):
-            xtra["column_map"] = src.extra["column_map"]
         info = VersionInfo(
             version=0,
             timestamp=time.time(),
@@ -1958,10 +1929,10 @@ class VersionedTable:
     ) -> VersionInfo:
         """OPTIMIZE/compaction analog (utils/delta_ops.py:29-54): rewrite
         the snapshot into ``target_files`` files (per partition when
-        partitioned). When the table carries skipping stats (or the
-        caller passes ``stats_cols``), the compacted units get fresh
-        stats — OPTIMIZE must not silently degrade a skipping-enabled
-        table into an always-scan one."""
+        partitioned). The compacted units are statted and bloomed for
+        the table's skipping columns like every other writer's —
+        OPTIMIZE must not silently degrade a skipping-enabled table into
+        an always-scan one; ``stats_cols`` adds stats columns."""
         info = self._resolve()
         # read PHYSICALLY (tombstones applied, logical map NOT): the
         # rewritten units must keep storage names so a pending rename
@@ -1969,47 +1940,12 @@ class VersionedTable:
         df = self._read_with_deletes(info, info.units)
         if not info.partition_by:
             df = df.coalesce(target_files)
-        new_units = self._write_units(df, info.partition_by or None)
-        if stats_cols is None and info.extra.get("stats"):
-            # re-stat the columns the previous snapshot tracked
-            stats_cols = sorted(
-                {c for s in info.extra["stats"].values() for c in s}
-            )
-        xtra: dict = {}
-        if stats_cols:
-            stats = self._collect_stats(
-                new_units, stats_cols, bool(info.partition_by)
-            )
-            if stats:
-                xtra["stats"] = stats
-        if info.extra.get("blooms"):
-            # OPTIMIZE must not degrade equality skipping either —
-            # rebuild blooms for the columns the snapshot tracked
-            bloom_cols = sorted(
-                {c for b in info.extra["blooms"].values() for c in b}
-            )
-            nb = self._collect_blooms(
-                new_units, bloom_cols, bool(info.partition_by)
-            )
-            if nb:
-                xtra["blooms"] = nb
-        if info.extra.get("column_map"):
-            xtra["column_map"] = info.extra["column_map"]
-        # Pin the expected head (info.version + 1): compaction is a
-        # read-modify-write, so if any writer committed since the
-        # snapshot read, this commit must FAIL (ConcurrentWriteError)
-        # rather than rebase and silently drop their rows.
-        vinfo = VersionInfo(
-            version=info.version + 1,
-            timestamp=time.time(),
-            operation="OPTIMIZE",
-            mode="overwrite",
-            units=new_units,
-            partition_by=list(info.partition_by),
-            extra=xtra,
-        )
-        self._commit(vinfo)
-        return vinfo
+        new_units = self._write_units(df, info.partition_by)
+        props = self._props(info, StructType(), info.partition_by, stats_cols, None)
+        # pinned to the snapshot read: compaction is a read-modify-write,
+        # so a writer committing since must fail this commit rather than
+        # lose its rows to a rebase
+        return self._next(info, "OPTIMIZE", "overwrite", [], new_units, props)
 
     # ----------------------------------------------------------- merge
 
@@ -2104,7 +2040,8 @@ class VersionedTable:
         if not self.exists():
             return self.write(source, mode="overwrite", operation="MERGE", extra=extra)
         info = self._require_no_column_map("merge")
-        cols = self.read().columns
+        schema = self._schema(info)
+        cols = schema.fieldNames()
         update_columns = update_columns or [
             c for c in cols if c not in keys and c in source.columns
         ]
@@ -2117,11 +2054,7 @@ class VersionedTable:
             carried_units = [u for u in info.units if u.split("/", 1)[1] not in touched]
             # read THROUGH pending merge-on-read tombstones: a raw unit
             # read would resurrect MoR-deleted rows into the rewrite
-            target = (
-                self._conform_types(self._read_with_deletes(info, touched_units))
-                if touched_units
-                else self.read().limit(0)
-            )
+            target = self._read_with_deletes(info, touched_units)
         else:
             carried_units = []
             target = self.read()
@@ -2183,25 +2116,11 @@ class VersionedTable:
                 merged = self._assign_identity(merged, name, spec, only_null=True)
 
         self._check_constraints(merged, "MERGE")
-        new_units = self._write_units(merged, part_cols or None)
-        xtra = {
-            **(extra or {}), "keys": keys, "pruned": prunable,
-            **self._carry(info, carried_units),
-        }
-        # Pinned to the snapshot version this merge read (not the
-        # current head): a concurrent commit in between must surface as
-        # ConcurrentWriteError, not be silently overwritten.
-        vinfo = VersionInfo(
-            version=info.version + 1,
-            timestamp=time.time(),
-            operation="MERGE",
-            mode=None,
-            units=carried_units + new_units,
-            partition_by=list(part_cols or []),
-            extra=xtra,
+        new_units = self._write_units(self._as_logged(merged, schema), part_cols)
+        return self._next(
+            info, "MERGE", None, carried_units, new_units,
+            {**(extra or {}), "keys": keys, "pruned": prunable},
         )
-        self._commit(vinfo)
-        return vinfo
 
     # ------------------------------------------------ idempotent writers
 

@@ -316,6 +316,24 @@ def test_duplicate_clusters_distributed_path(spark):
     assert via_loop == via_uf
 
 
+def test_duplicate_clusters_self_loop_only_node(spark):
+    """A node that appears only in (x, x) pairs is its own cluster on
+    both paths: union-find labels it (x, x), and the distributed
+    star-contraction path must not drop it with the self-loop edges."""
+    from spark_delta_lakehouse_nyctaxi_spark.operators.dedup import (
+        duplicate_clusters,
+    )
+
+    pairs = spark.createDataFrame([(5, 5), (1, 2), (2, 2)], "id_a long, id_b long")
+    via_loop = {
+        (r.id, r.cluster_id)
+        for r in duplicate_clusters(pairs, local_threshold=0).collect()
+    }
+    via_uf = {(r.id, r.cluster_id) for r in duplicate_clusters(pairs).collect()}
+    assert via_uf == {(5, 5), (1, 1), (2, 1)}
+    assert via_loop == via_uf
+
+
 def test_freq_items_superset_of_true_heavy_hitters(spark):
     """freqItems may over-report but must contain every key whose true
     frequency is >= the support threshold."""

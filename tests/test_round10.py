@@ -133,6 +133,35 @@ def test_substr_base_index_persists_across_sessions(spark):
         shutil.rmtree(sx._SUBSTR_INDEX_ROOT, ignore_errors=True)
 
 
+def test_substr_base_index_rebuilds_pre_schema_artifact(spark):
+    """An artifact whose head manifest logs no table schema (written
+    before manifests carried one) cannot be read; base_index_table
+    rebuilds it once and stamps it, like a pre-fingerprint artifact."""
+    import json
+    import os
+    import shutil
+
+    from spark_delta_lakehouse_nyctaxi_spark.queries import suffix as sx
+
+    shutil.rmtree(sx._SUBSTR_INDEX_ROOT, ignore_errors=True)
+    try:
+        t, _ = sx.base_index_table(spark, SF)
+        fp = os.path.join(t._vlog, f"{t.latest_version():08d}.json")
+        with open(fp) as f:
+            manifest = json.load(f)
+        del manifest["extra"]["schema"]
+        with open(fp, "w") as f:
+            json.dump(manifest, f)
+        t2, _ = sx.base_index_table(spark, SF)
+        head = t2.history(limit=1)[0]
+        assert head["version"] == manifest["version"] + 1
+        assert "schema" in head["extra"]
+        assert head["extra"]["base_fingerprint"] == manifest["extra"]["base_fingerprint"]
+        assert t2.read().count() == t.read(version=head["version"]).count() > 0
+    finally:
+        shutil.rmtree(sx._SUBSTR_INDEX_ROOT, ignore_errors=True)
+
+
 def test_packing_curve_invariants(spark):
     """Internal identities of the packing-policy curve: chunk padding
     only in the final partial sequence, pad-per-doc never beats

@@ -92,6 +92,14 @@ def test_reliable_checkpoint_uses_configured_dir(spark, checkpoint_dir):
     assert entries, "reliable checkpoint left no files in the dir"
 
 
+def test_session_cleans_reliable_checkpoints(spark):
+    """Reliable checkpoint files are removed once their frame is
+    garbage-collected: the session enables the context cleaner's
+    checkpoint cleanup (Spark leaves it off by default)."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+
+
 def test_reliable_checkpoint_local_fallback(spark):
     """Without a dir the helper falls back to localCheckpoint and the
     values are unchanged."""

@@ -423,8 +423,8 @@ def test_stats_absent_units_always_scanned(spark, tmp_table_path):
 
 def test_stats_survive_partition_pruned_delete(spark, tmp_table_path):
     """DELETE carries untouched partitions by reference together with
-    their stats; the rewritten partition loses its stats (and is then
-    always scanned)."""
+    their stats, and the rewritten partition gets fresh stats for the
+    table's stats columns."""
     t = VersionedTable(spark, tmp_table_path)
     df = spark.createDataFrame(
         [(1, "a", 10), (2, "b", 20), (3, "b", 30)], "id long, part string, v long"
@@ -433,7 +433,7 @@ def test_stats_survive_partition_pruned_delete(spark, tmp_table_path):
     t.delete("id = 3")
     info = t._resolve()
     stats = info.extra.get("stats", {})
-    assert len(stats) == 1  # only the carried part=a unit
+    assert len(stats) == 2  # carried part=a and rewritten part=b
     got = t.scan({"v": (15, 25)})
     assert t.last_scan["skipped"] == 1  # part=a provably disjoint
     assert [r.id for r in got.collect()] == [2]
@@ -616,10 +616,10 @@ def test_mor_update_writes_only_matched_rows(spark, tmp_table_path):
 def test_detail_reports_skipping_and_tombstone_state(spark, tmp_table_path):
     t = VersionedTable(spark, tmp_table_path)
     t.write(_mk(spark, [{"id": i} for i in range(5)]), mode="overwrite", stats_cols=["id"])
-    t.write(_mk(spark, [{"id": 10}]), mode="append")  # stats-less unit
+    t.write(_mk(spark, [{"id": 10}]), mode="append")  # inherits stats_cols
     t.delete("id = 0", mode="merge-on-read")
     d = t.detail()
-    assert d["num_units"] == 2 and d["units_with_stats"] == 1
+    assert d["num_units"] == 2 and d["units_with_stats"] == 2
     assert d["stats_columns"] == ["id"] and d["pending_mor_deletes"] == 1
     t.compact()
     d2 = t.detail()
@@ -1363,17 +1363,34 @@ def test_detail_num_rows_from_log_after_every_writer(spark, tmp_path, monkeypatc
     """Each commit records the row count of every unit it adds (parquet
     footers, no Spark job), carried forward with the unit: the summed
     ``detail()["num_rows"]`` equals a full count after every writer and
-    is unknown (None) while a merge-on-read delete is pending. Restore
-    and clone carry the bloom filters with the counts."""
+    is unknown (None) while a merge-on-read delete is pending. Every
+    writer also stats and blooms the units it adds for the table's
+    logged skipping columns, so no unit ever lacks them, and every
+    snapshot reads back through the schema logged at version 0
+    (partition column included, with its written type). Restore and
+    clone carry the bloom filters with the counts."""
+    import json
+
     import pyarrow.parquet as pq
+    from pyspark.sql.types import DoubleType, LongType, StructType
 
     t = VersionedTable(spark, str(tmp_path / "t"))
 
     def check(tbl=t):
-        assert tbl.detail()["num_rows"] == tbl.read().count()
+        d = tbl.detail()
+        assert d["num_rows"] == tbl.read().count()
+        assert d["units_with_stats"] == d["units_with_blooms"] == d["num_units"]
+        assert tbl.read().schema == schema0
 
     rows = [{"id": i, "p": i % 4, "v": float(i)} for i in range(40)]
-    t.write(_mk(spark, rows), mode="overwrite", partition_by=["p"], bloom_cols=["id"])
+    t.write(
+        _mk(spark, rows), mode="overwrite", partition_by=["p"],
+        stats_cols=["id"], bloom_cols=["id"],
+    )
+    schema0 = StructType.fromJson(json.loads(t._versions()[0].extra["schema"]))
+    assert [(f.name, f.dataType) for f in schema0] == [
+        ("id", LongType()), ("v", DoubleType()), ("p", LongType())
+    ]
     check()
     more = [{"id": 100 + i, "p": i % 5, "v": 1.0} for i in range(10)]
     t.write(_mk(spark, more), mode="append")
@@ -1397,7 +1414,9 @@ def test_detail_num_rows_from_log_after_every_writer(spark, tmp_path, monkeypatc
     check(c)
     assert c.detail()["units_with_blooms"] == blooms_v1
     t.delete("id > 30", mode="merge-on-read")
-    assert t.detail()["num_rows"] is None
+    d = t.detail()
+    assert d["num_rows"] is None
+    assert d["units_with_stats"] == d["units_with_blooms"] == d["num_units"]
     t.compact()
     check()
 
@@ -1410,3 +1429,74 @@ def test_detail_num_rows_from_log_after_every_writer(spark, tmp_path, monkeypatc
 
     monkeypatch.setattr(pq, "read_metadata", no_footers)
     assert u.detail()["num_rows"] == 50
+
+
+def test_append_and_read_cost_independent_of_history_depth(spark, tmp_path, monkeypatch):
+    """The schema comes from the version log, not from the data: a
+    one-row append runs the same number of Spark jobs and parquet reads
+    at history depth 2 and 30, and reading an unpartitioned snapshot
+    is a single parquet call however many units it holds."""
+    from pyspark.sql import DataFrameReader
+
+    def build(depth):
+        t = VersionedTable(spark, str(tmp_path / f"depth{depth}"))
+        for i in range(depth):
+            t.write(
+                spark.createDataFrame([(i, "a")], "id long, v string"),
+                mode="append" if i else "overwrite",
+            )
+        return t
+
+    tables = {depth: build(depth) for depth in (2, 30)}
+    calls = []
+    real_parquet = DataFrameReader.parquet
+
+    def counting_parquet(self, *paths, **kw):
+        calls.append(paths)
+        return real_parquet(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
+    sc = spark.sparkContext
+    cost = {}
+    for depth, t in tables.items():
+        row = spark.createDataFrame([(100, "b")], "id long, v string")
+        group = f"history-depth-{depth}-{os.getpid()}"
+        calls.clear()
+        sc.setJobGroup(group, f"one-row append at depth {depth}")
+        try:
+            t.write(row, mode="append")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        append_reads = len(calls)
+        calls.clear()
+        snapshot = t.read()
+        read_calls = len(calls)
+        assert snapshot.count() == depth + 1
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        cost[depth] = {"jobs": jobs, "append_reads": append_reads, "read_calls": read_calls}
+    assert cost[2] == cost[30]
+    assert cost[30]["read_calls"] == 1
+
+
+def test_manifest_without_schema_raises(spark, tmp_path):
+    """A head manifest that records no schema (written before the log
+    carried one) is refused with a ValueError naming the table and the
+    fix; an overwrite, which needs no prior schema, rewrites it."""
+    import json
+
+    t = VersionedTable(spark, str(tmp_path / "legacy"))
+    t.write(spark.createDataFrame([(1, "a")], "id long, v string"), mode="overwrite")
+    fp = os.path.join(t._vlog, "00000000.json")
+    with open(fp) as f:
+        manifest = json.load(f)
+    del manifest["extra"]["schema"]
+    with open(fp, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="rewrite the table") as err:
+        t.read()
+    assert t.path in str(err.value)
+    with pytest.raises(ValueError, match="rewrite the table"):
+        t.write(spark.createDataFrame([(2, "b")], "id long, v string"), mode="append")
+    t.write(spark.createDataFrame([(3, "c")], "id long, v string"), mode="overwrite")
+    assert [tuple(r) for r in t.read().collect()] == [(3, "c")]
