@@ -30,7 +30,9 @@ the single source of its snapshot's metadata, in ``extra``:
   ``schema`` (the physical schema as ``StructType.json()``, data
   columns then partition columns, as Delta's ``metaData.schemaString``),
   ``stats_cols`` and ``bloom_cols`` (the skipping columns every unit
-  is statted and bloomed for) and ``column_map`` (a pending rename);
+  is statted and bloomed for), ``column_map`` (a pending rename) and
+  the table's rules: ``constraints`` (CHECK), ``generated``,
+  ``defaults`` and ``identity`` (with its allocation watermark);
 - per-unit entries, carried with the unit: ``rows``, ``stats`` and
   ``blooms`` (Delta's per-file ``numRecords`` and stats);
 - pending merge-on-read tombstones (``mor_deletes``), each scoped to
@@ -42,11 +44,13 @@ so their cost does not grow with history.
 Concurrency follows Delta's optimistic protocol: a commit is a
 put-if-absent of ``<version>.json`` (``os.link`` — atomic on POSIX,
 fails EEXIST if another writer won the version). Losers refresh the
-snapshot and retry: blind writes (write/restore) rebase automatically;
-read-modify-write operations (merge/compact) raise
-:class:`ConcurrentWriteError` because their data was derived from a
-stale snapshot — the caller re-runs on the new snapshot, exactly
-Delta's conflict-detection semantics.
+snapshot and retry: blind writes (write/restore) rebase automatically,
+a write only while the table's rules are unchanged (Delta raises
+``MetadataChangedException`` there), and rule changes re-validate
+against the new snapshot; read-modify-write operations (merge/compact)
+raise :class:`ConcurrentWriteError` because their data was derived
+from a stale snapshot — the caller re-runs on the new snapshot,
+exactly Delta's conflict-detection semantics.
 """
 
 from __future__ import annotations
@@ -129,9 +133,9 @@ class VersionedTable:
 
     @staticmethod
     def _is_version_file(fn: str) -> bool:
-        # strictly NNNNNNNN.json — side metadata (_constraints.json,
-        # temp files) lives in the same dir and must not parse as a
-        # version manifest
+        # strictly NNNNNNNN.json — checkpoints, the _last_checkpoint
+        # pointer and temp files live in the same dir and must not
+        # parse as a version manifest
         stem = fn[:-5]
         return fn.endswith(".json") and stem.isdigit()
 
@@ -341,22 +345,64 @@ class VersionedTable:
             return eligible[-1]
         return vs[-1]
 
-    # ------------------------------------------------------ constraints
+    # ------------------------------------------------------- table rules
+    #
+    # CHECK constraints, generated columns, column defaults and identity
+    # columns are table properties like the schema (Delta logs them too:
+    # constraints in ``metaData.configuration``, the others in the
+    # schema's field metadata), so a version's rules travel with its
+    # rows through time travel, restore and clone. Each rule change
+    # commits one metadata-only version.
 
-    @property
-    def _constraints_path(self) -> str:
-        return os.path.join(self._vlog, "_constraints.json")
+    #: the rule properties: name → SQL expression for ``constraints``,
+    #: ``generated`` and ``defaults``; name → {start, step, watermark}
+    #: for ``identity``
+    _RULES = ("constraints", "generated", "defaults", "identity")
+
+    @classmethod
+    def _rules(cls, info: VersionInfo) -> dict:
+        """The rule properties ``info`` logs, empty ones left out."""
+        return {k: info.extra[k] for k in cls._RULES if info.extra.get(k)}
+
+    def _head(self) -> VersionInfo:
+        """The latest version; for a missing table, the empty version -1
+        that a first commit follows."""
+        vs = self._versions()
+        if vs:
+            return vs[-1]
+        return VersionInfo(-1, 0.0, "", None, [], extra={"schema": StructType([]).json()})
+
+    def _set_rule(self, operation: str, key: str, name: str, value=None, validate=None) -> None:
+        """Commit a metadata-only version whose ``key`` property maps
+        ``name`` to ``value`` (``value=None`` drops it; dropping an
+        absent rule commits nothing). ``validate(head)`` runs first
+        against the head the commit builds on; the commit is pinned to
+        that head, so a concurrent commit re-reads the head and
+        validates again (as :meth:`rename_column` does)."""
+        for attempt in range(10):
+            head = self._head()
+            rules = dict(head.extra.get(key, {}))
+            if value is None:
+                if name not in rules:
+                    return
+                del rules[name]
+            else:
+                if validate is not None:
+                    validate(head)
+                rules[name] = value
+            try:
+                self._next(head, operation, None, head.units, [], {key: rules})
+                return
+            except ConcurrentWriteError:
+                if attempt == 9:
+                    raise
 
     def constraints(self) -> dict[str, str]:
-        """Current CHECK constraints (Delta ``ALTER TABLE ... ADD
-        CONSTRAINT`` analog). Table-level, enforced on every write path
-        from the moment they are added (constraint history is not
-        time-traveled — matching the practical Delta behavior where the
-        latest metadata governs writes)."""
-        if not os.path.exists(self._constraints_path):
-            return {}
-        with open(self._constraints_path) as f:
-            return json.load(f)
+        """CHECK constraints of the latest version (Delta ``ALTER TABLE
+        ... ADD CONSTRAINT`` analog), enforced on every write path.
+        Versioned with the table: time travel, restore and clone see
+        the constraints of their version."""
+        return dict(self._head().extra.get("constraints", {}))
 
     def add_constraint(self, name: str, expr: str) -> None:
         """Register a CHECK constraint after validating the EXISTING
@@ -372,46 +418,34 @@ class VersionedTable:
         data identities across later renames), but an expression
         validated here against the LOGICAL view would bind to a
         different (or missing) column at append time."""
-        if self.exists():
-            self._require_no_column_map("add_constraint")
-            bad = self.read().filter(F.expr(f"({expr}) IS FALSE")).count()
+
+        def validate(head: VersionInfo) -> None:
+            self._require_no_column_map("add_constraint", head)
+            if not self._schema(head).fields:
+                return  # nothing written yet
+            bad = (
+                self._read_with_deletes(head, head.units)
+                .filter(F.expr(f"({expr}) IS FALSE"))
+                .count()
+            )
             if bad:
                 raise ValueError(
                     f"cannot add constraint {name!r}: {bad} existing rows "
                     f"violate ({expr})"
                 )
-        cons = self.constraints()
-        cons[name] = expr
-        os.makedirs(self._vlog, exist_ok=True)
-        tmp = self._constraints_path + f".{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(cons, f)
-        os.replace(tmp, self._constraints_path)
+
+        self._set_rule("ADD CONSTRAINT", "constraints", name, expr, validate)
 
     def drop_constraint(self, name: str) -> None:
-        cons = self.constraints()
-        cons.pop(name, None)
-        tmp = self._constraints_path + f".{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(cons, f)
-        os.replace(tmp, self._constraints_path)
+        self._set_rule("DROP CONSTRAINT", "constraints", name)
 
     def drop_generated_column(self, name: str) -> None:
         """Unregister a generated column (the data column stays; only
         the ALWAYS-AS enforcement is dropped) — the drop-and-re-add
         path the rename guards point at."""
-        gen = self.generated_columns()
-        gen.pop(name, None)
-        tmp = self._generated_path + f".{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(gen, f)
-        os.replace(tmp, self._generated_path)
+        self._set_rule("DROP GENERATED COLUMN", "generated", name)
 
     # -------------------------------------------------- column defaults
-
-    @property
-    def _defaults_path(self) -> str:
-        return os.path.join(self._vlog, "_defaults.json")
 
     def column_defaults(self) -> dict[str, str]:
         """Registered column DEFAULTs (Delta ``ALTER TABLE ... SET
@@ -421,10 +455,7 @@ class VersionedTable:
         gaps, ALWAYS-AS enforces); unlike Delta, defaults here apply
         only to writes after registration — existing rows are
         untouched and read back as stored."""
-        if not os.path.exists(self._defaults_path):
-            return {}
-        with open(self._defaults_path) as f:
-            return json.load(f)
+        return dict(self._head().extra.get("defaults", {}))
 
     def add_column_default(self, name: str, expr: str) -> None:
         """Register ``name DEFAULT expr``. The expression may reference
@@ -433,9 +464,13 @@ class VersionedTable:
         analysis against the current schema; refused while a rename
         mapping is pending (write-path evaluation binds physical
         names, same argument as add_constraint)."""
-        if self.exists():
-            info = self._require_no_column_map("add_column_default")
-            probe = self.spark.createDataFrame([], self._schema(info))
+
+        def validate(head: VersionInfo) -> None:
+            self._require_no_column_map("add_column_default", head)
+            schema = self._schema(head)
+            if not schema.fields:
+                return  # nothing written yet
+            probe = self.spark.createDataFrame([], schema)
             if name not in probe.columns:
                 raise ValueError(
                     f"column {name!r} does not exist; defaults attach to "
@@ -449,46 +484,22 @@ class VersionedTable:
                     f"default expression ({expr}) does not analyze "
                     "against the table schema"
                 ) from None
-        dfl = self.column_defaults()
-        dfl[name] = expr
-        os.makedirs(self._vlog, exist_ok=True)
-        tmp = self._defaults_path + f".{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(dfl, f)
-        os.replace(tmp, self._defaults_path)
+
+        self._set_rule("SET DEFAULT", "defaults", name, expr, validate)
 
     def drop_column_default(self, name: str) -> None:
-        dfl = self.column_defaults()
-        dfl.pop(name, None)
-        tmp = self._defaults_path + f".{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(dfl, f)
-        os.replace(tmp, self._defaults_path)
-
-    def _apply_defaults(self, df: DataFrame) -> DataFrame:
-        """Fill MISSING default columns on an incoming frame (cheap
-        projection; explicit values pass through untouched)."""
-        for name, expr in self.column_defaults().items():
-            if name not in df.columns:
-                df = df.withColumn(name, F.expr(expr))
-        return df
+        self._set_rule("DROP DEFAULT", "defaults", name)
 
     # ------------------------------------------------ identity columns
-
-    @property
-    def _identity_path(self) -> str:
-        return os.path.join(self._vlog, "_identity.json")
 
     def identity_columns(self) -> dict[str, dict]:
         """Registered identity columns (Delta ``GENERATED ALWAYS AS
         IDENTITY`` analog): name → {start, step, watermark}. The
-        watermark is the next value to allocate; like Delta, failed
-        commits may leave gaps (ranges are reserved before the write),
-        and the watermark file is not OCC-protected."""
-        if not os.path.exists(self._identity_path):
-            return {}
-        with open(self._identity_path) as f:
-            return json.load(f)
+        watermark is the next value to allocate; it advances in the
+        commit that writes the ids, so two writers that allocate from
+        the same watermark conflict and the loser retries with fresh
+        ids. A commit that fails leaves no gap."""
+        return dict(self._head().extra.get("identity", {}))
 
     def add_identity_column(
         self, name: str, start: int = 1, step: int = 1
@@ -498,51 +509,37 @@ class VersionedTable:
 
         Delta parity: identity columns can only be defined at table
         creation (``ALTER TABLE`` cannot add one), so this refuses on
-        a table that already has data. Every write path that omits the
-        column gets values assigned via the scale-safe
-        ``global_row_number`` pattern (range exchange + offset cumsum
-        — never a single-partition window); supplying explicit values
-        is rejected (ALWAYS semantics). Unlike Delta's arbitrary
-        allocation, assignment order is the lexicographic order of the
-        incoming batch's other columns — deterministic, hence
-        value-oracle-able."""
+        a table that already logs a column; on a missing table it
+        commits version 0 with no data and an empty schema. Every write
+        path that omits the column gets values assigned via the
+        scale-safe ``global_row_number`` pattern (range exchange +
+        offset cumsum — never a single-partition window); supplying
+        explicit values is rejected (ALWAYS semantics). Unlike Delta's
+        arbitrary allocation, assignment order is the lexicographic
+        order of the incoming batch's other columns — deterministic,
+        hence value-oracle-able."""
         if step == 0:
             raise ValueError("identity step must be non-zero")
-        if self.exists():
-            raise ValueError(
-                "identity columns can only be defined before the first "
-                "write (Delta parity: ALTER TABLE cannot add IDENTITY)"
-            )
-        ids = self.identity_columns()
-        ids[name] = {"start": int(start), "step": int(step), "watermark": int(start)}
-        os.makedirs(self._vlog, exist_ok=True)
-        tmp = self._identity_path + f".{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(ids, f)
-        os.replace(tmp, self._identity_path)
 
-    def _reserve_identity_range(self, name: str, n: int) -> int:
-        """Advance the watermark by ``n`` steps and return the range
-        start (reserved BEFORE the data lands — failed commits leave
-        gaps, exactly like Delta identity)."""
-        ids = self.identity_columns()
-        spec = ids[name]
-        first = spec["watermark"]
-        spec["watermark"] = first + spec["step"] * n
-        tmp = self._identity_path + f".{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(ids, f)
-        os.replace(tmp, self._identity_path)
-        return first
+        def validate(head: VersionInfo) -> None:
+            if self._schema(head).fields:
+                raise ValueError(
+                    "identity columns can only be defined before the first "
+                    "write (Delta parity: ALTER TABLE cannot add IDENTITY)"
+                )
+
+        spec = {"start": int(start), "step": int(step), "watermark": int(start)}
+        self._set_rule("ADD IDENTITY COLUMN", "identity", name, spec, validate)
 
     def _assign_identity(
         self, df: DataFrame, name: str, spec: dict, only_null: bool = False
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, dict]:
         """Assign identity values to ``df`` (or, with ``only_null``, to
-        its NULL-``name`` rows — the MERGE insert arm). Distributed:
-        one range exchange over the incoming BATCH (not the table) via
-        global_row_number; the per-partition counts it collects are the
-        only driver metadata."""
+        its NULL-``name`` rows — the MERGE insert arm), and return it
+        with ``spec`` advanced past them, for the commit that writes
+        them to log. Distributed: one range exchange over the incoming
+        BATCH (not the table) via global_row_number; the per-partition
+        counts it collects are the only driver metadata."""
         from ..operators.indexing import global_row_number
 
         step = spec["step"]
@@ -554,8 +551,8 @@ class VersionedTable:
             todo, keep = df, None
         n = todo.count()
         if n == 0:
-            return df
-        first = self._reserve_identity_range(name, n)
+            return df, spec
+        first = spec["watermark"]
         assigned = (
             global_row_number(todo, order_cols, out_col="__ident_idx")
             .withColumn(
@@ -566,23 +563,17 @@ class VersionedTable:
             )
             .drop("__ident_idx")
         )
+        spec = {**spec, "watermark": first + step * n}
         if keep is None:
-            return assigned
-        return keep.unionByName(assigned)
+            return assigned, spec
+        return keep.unionByName(assigned), spec
 
     # ------------------------------------------------- generated cols
-
-    @property
-    def _generated_path(self) -> str:
-        return os.path.join(self._vlog, "_generated.json")
 
     def generated_columns(self) -> dict[str, str]:
         """Registered generated columns (Delta ``GENERATED ALWAYS AS``
         analog): column name → SQL expression over the other columns."""
-        if not os.path.exists(self._generated_path):
-            return {}
-        with open(self._generated_path) as f:
-            return json.load(f)
+        return dict(self._head().extra.get("generated", {}))
 
     def add_generated_column(self, name: str, expr: str) -> None:
         """Register ``name`` as GENERATED ALWAYS AS ``expr``.
@@ -600,15 +591,19 @@ class VersionedTable:
         reason as :meth:`add_constraint`: write-path enforcement runs
         on physical names, so an expression validated against the
         logical view would mis-bind after :meth:`_to_physical`."""
-        if self.exists():
-            info = self._require_no_column_map("add_generated_column")
-            if name not in self._schema(info).fieldNames():
+
+        def validate(head: VersionInfo) -> None:
+            self._require_no_column_map("add_generated_column", head)
+            names = self._schema(head).fieldNames()
+            if not names:
+                return  # nothing written yet
+            if name not in names:
                 raise ValueError(
                     f"column {name!r} does not exist; backfill it (e.g. "
                     "rewrite with the expression) before registering"
                 )
             bad = (
-                self.read()
+                self._read_with_deletes(head, head.units)
                 .filter(F.expr(f"NOT ({name} <=> ({expr}))"))
                 .count()
             )
@@ -617,32 +612,46 @@ class VersionedTable:
                     f"cannot register generated column {name!r}: {bad} "
                     f"existing rows do not match ({expr})"
                 )
-        gen = self.generated_columns()
-        gen[name] = expr
-        os.makedirs(self._vlog, exist_ok=True)
-        tmp = self._generated_path + f".{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(gen, f)
-        os.replace(tmp, self._generated_path)
 
-    def _apply_generated(self, df: DataFrame) -> DataFrame:
-        """Compute any MISSING generated columns on an incoming frame
-        (present ones are validated by :meth:`_check_constraints`)."""
-        for name, expr in self.generated_columns().items():
+        self._set_rule("ADD GENERATED COLUMN", "generated", name, expr, validate)
+
+    def _fill(
+        self, df: DataFrame, rules: dict, identity_supplied_ok: bool = False
+    ) -> tuple[DataFrame, dict]:
+        """``df`` with the columns it omits filled under ``rules``:
+        defaults, then generated columns (present ones are validated by
+        :meth:`_check_constraints`), then identity values; and the
+        ``identity`` property the commit logs, watermarks advanced past
+        the ids assigned here (empty when the table has none)."""
+        for key in ("defaults", "generated"):
+            for name, expr in rules.get(key, {}).items():
+                if name not in df.columns:
+                    df = df.withColumn(name, F.expr(expr))
+        identity = {}
+        for name, spec in rules.get("identity", {}).items():
             if name not in df.columns:
-                df = df.withColumn(name, F.expr(expr))
-        return df
+                df, spec = self._assign_identity(df, name, spec)
+            elif not identity_supplied_ok:
+                raise ValueError(
+                    f"column {name!r} is GENERATED ALWAYS AS IDENTITY "
+                    "and cannot be supplied; omit it and values are "
+                    "assigned automatically"
+                )
+            identity[name] = spec
+        return df, ({"identity": identity} if identity else {})
 
-    def _check_constraints(self, df: DataFrame, what: str) -> None:
-        """Validate incoming rows against every CHECK constraint in ONE
-        pass (all violation counts in a single aggregate, the DQ
-        framework's fused-check discipline) BEFORE any data lands — a
-        rejected commit leaves no new version and no orphan units that
-        vacuum would have to collect.  Generated-column equations ride
-        in the same fused aggregate as implicit constraints, so UPDATE
-        and MERGE cannot break them either."""
-        cons = dict(self.constraints())
-        for name, expr in self.generated_columns().items():
+    @staticmethod
+    def _check_constraints(df: DataFrame, rules: dict, what: str) -> None:
+        """Validate incoming rows against every CHECK constraint of
+        ``rules`` in ONE pass (all violation counts in a single
+        aggregate, the DQ framework's fused-check discipline) BEFORE
+        any data lands — a rejected commit leaves no new version and no
+        orphan units that vacuum would have to collect.
+        Generated-column equations ride in the same fused aggregate as
+        implicit constraints, so UPDATE and MERGE cannot break them
+        either."""
+        cons = dict(rules.get("constraints", {}))
+        for name, expr in rules.get("generated", {}).items():
             if name in df.columns:
                 cons[f"__generated_{name}"] = f"{name} <=> ({expr})"
         if not cons:
@@ -726,7 +735,7 @@ class VersionedTable:
         return out
 
     #: table properties, carried by every commit unless it changes them
-    _PROPS = ("schema", "stats_cols", "bloom_cols", "column_map")
+    _PROPS = ("schema", "stats_cols", "bloom_cols", "column_map", *_RULES)
     #: manifest entries keyed by unit, valid for as long as the unit is
     #: live: skipping stats, bloom filters and row counts
     _PER_UNIT = ("stats", "blooms", "rows")
@@ -970,30 +979,23 @@ class VersionedTable:
         directory names. ``stats_cols`` and ``bloom_cols`` set the
         table's skipping columns on overwrite and extend them on
         append; every writer stats and blooms the units it adds for
-        them."""
+        them. Both modes keep the table's rules (constraints, generated
+        columns, defaults, identity columns)."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"unsupported mode {mode!r}")
-        # compute missing default + generated columns BEFORE the append
-        # schema comparison (an appender may legitimately omit them)
-        df = self._apply_defaults(df)
-        df = self._apply_generated(df)
-        for name, spec in self.identity_columns().items():
-            if name in df.columns:
-                if not _identity_supplied_ok:
-                    raise ValueError(
-                        f"column {name!r} is GENERATED ALWAYS AS IDENTITY "
-                        "and cannot be supplied; omit it and values are "
-                        "assigned automatically"
-                    )
-            else:
-                df = self._assign_identity(df, name, spec)
-        prev = self._versions()
-        head = prev[-1] if mode == "append" and prev else None
+        cur = self._head()
+        rules = self._rules(cur)
+        # fill missing default, generated and identity columns BEFORE the
+        # append schema comparison (an appender may legitimately omit them)
+        df, identity = self._fill(df, rules, _identity_supplied_ok)
+        head = cur if mode == "append" else None
         if head is not None:
             partition_by = partition_by or head.partition_by
             m = self._column_map_of(head)
             existing = {m.get(f.name, f.name) for f in self._schema(head).fields}
-            if set(df.columns) != existing and not merge_schema:
+            # a head that logs no column yet (rules registered before
+            # the first write) takes the frame's schema
+            if existing and set(df.columns) != existing and not merge_schema:
                 added = sorted(set(df.columns) - existing)
                 missing = sorted(existing - set(df.columns))
                 raise ValueError(
@@ -1006,13 +1008,15 @@ class VersionedTable:
             inv = {l: p for p, l in m.items()}
             stats_cols = [inv.get(c, c) for c in stats_cols or []]
             bloom_cols = [inv.get(c, c) for c in bloom_cols or []]
-        self._check_constraints(df, f"write({mode})")
+        self._check_constraints(df, rules, f"write({mode})")
         props = self._props(head, df.schema, partition_by, stats_cols, bloom_cols)
         new_units = self._write_units(df, partition_by)
         # Optimistic commit: the data units above are immutable and
         # uuid-named, so on a version conflict only the manifest needs
         # rebuilding against the refreshed snapshot (blind writes
-        # rebase; appends pick up the winner's units and properties).
+        # rebase; appends pick up the winner's units and properties) —
+        # unless the winner changed the rules the rows were filled and
+        # checked under.
         for attempt in range(10):
             xtra = dict(extra or {})
             units = new_units
@@ -1022,9 +1026,10 @@ class VersionedTable:
                 # appended rows are never filtered
                 xtra.update(self._carry(head, head.units))
                 units = head.units + new_units
-            xtra.update(props)
+            # an overwrite keeps the rules too
+            xtra.update({**rules, **identity, **props})
             info = VersionInfo(
-                version=(prev[-1].version + 1 if prev else 0),
+                version=cur.version + 1,
                 timestamp=time.time(),
                 operation=operation,
                 mode=mode,
@@ -1038,8 +1043,15 @@ class VersionedTable:
             except ConcurrentWriteError:
                 if attempt == 9:
                     raise
-                prev = self._versions()
-                head = prev[-1] if mode == "append" and prev else None
+                cur = self._head()
+                if self._rules(cur) != rules:
+                    # Delta's MetadataChangedException
+                    raise ConcurrentWriteError(
+                        f"version {cur.version} at {self.path} changed the "
+                        "table rules this write was checked against; re-run "
+                        "it on the new snapshot"
+                    ) from None
+                head = cur if mode == "append" else None
                 props = self._props(head, df.schema, partition_by, stats_cols, bloom_cols)
 
     # ------------------------------------------------------------ read
@@ -1131,8 +1143,10 @@ class VersionedTable:
             )
         return df.select(*[F.col(c).alias(inv.get(c, c)) for c in df.columns])
 
-    def _require_no_column_map(self, op: str) -> VersionInfo:
-        info = self._resolve()
+    def _require_no_column_map(self, op: str, info: VersionInfo | None = None) -> VersionInfo:
+        """``info`` (by default the latest version), refused while it
+        has a rename mapping pending."""
+        info = info or self._resolve()
         if self._column_map_of(info):
             raise ValueError(
                 f"{op} is not supported while a metadata-only column "
@@ -1196,13 +1210,13 @@ class VersionedTable:
             # a renamed generated column would be re-computed under its
             # old name alongside the new one). Guided error instead of
             # the opaque AnalysisException (round-3 advisor item).
-            gen = self.generated_columns()
+            gen = info.extra.get("generated", {})
             if old in gen:
                 raise ValueError(
                     f"{old!r} is a generated column; drop_generated_column "
                     "and re-register it under the new name after renaming"
                 )
-            if old in self.identity_columns():
+            if old in info.extra.get("identity", {}):
                 raise ValueError(
                     f"{old!r} is a GENERATED ALWAYS AS IDENTITY column; "
                     "its allocation metadata is keyed by name — renaming "
@@ -1244,7 +1258,7 @@ class VersionedTable:
         if not m:
             return info
         df = self.read()  # logical names
-        for name, expr in self.constraints().items():
+        for name, expr in info.extra.get("constraints", {}).items():
             try:
                 # select, not filter: Spark 4's hidden-output resolution
                 # lets a FILTER see the pre-rename child columns through
@@ -1260,8 +1274,8 @@ class VersionedTable:
         # Generated columns get the same guided validation (round-3
         # advisor item): after materialization the logical names are the
         # storage names, so an expression referencing a pre-rename name
-        # would fail opaquely inside _apply_generated on the next append.
-        for name, expr in self.generated_columns().items():
+        # would fail opaquely inside _fill on the next append.
+        for name, expr in info.extra.get("generated", {}).items():
             try:
                 df.select(F.expr(expr)).schema
             except Exception:
@@ -1486,15 +1500,8 @@ class VersionedTable:
         from urllib.parse import unquote, urlparse
 
         info = self._require_no_column_map("replace_where")
-        df = self._apply_defaults(df)
-        df = self._apply_generated(df)
-        for name, spec in self.identity_columns().items():
-            if name in df.columns:
-                raise ValueError(
-                    f"column {name!r} is GENERATED ALWAYS AS IDENTITY "
-                    "and cannot be supplied; omit it"
-                )
-            df = self._assign_identity(df, name, spec)
+        rules = self._rules(info)
+        df, identity = self._fill(df, rules)
         schema = self._schema(info)
         existing = set(schema.fieldNames())
         if set(df.columns) != existing:
@@ -1509,7 +1516,7 @@ class VersionedTable:
                 f"predicate ({condition}); Delta semantics reject the "
                 "whole commit"
             )
-        self._check_constraints(df, "REPLACE WHERE")
+        self._check_constraints(df, rules, "REPLACE WHERE")
         part_cols = info.partition_by
         matched_files = {
             unquote(urlparse(r["_f"]).path)
@@ -1532,7 +1539,7 @@ class VersionedTable:
         new_units += self._write_units(self._as_logged(df, schema), part_cols)
         return self._next(
             info, "REPLACE WHERE", "overwrite", carried, new_units,
-            {"condition": condition},
+            {"condition": condition, **identity},
         )
 
     def update(
@@ -1559,13 +1566,14 @@ class VersionedTable:
         in both modes."""
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"unsupported update mode {mode!r}")
-        bad_ident = set(set_exprs) & set(self.identity_columns())
+        info = self._require_no_column_map("update")
+        rules = self._rules(info)
+        bad_ident = set(set_exprs) & set(rules.get("identity", {}))
         if bad_ident:
             raise ValueError(
                 f"column(s) {sorted(bad_ident)} are GENERATED ALWAYS AS "
                 "IDENTITY and cannot be updated"
             )
-        info = self._require_no_column_map("update")
         df = self.read()
         if mode == "merge-on-read":
             matched = df.filter(F.expr(f"coalesce(({condition}), false)"))
@@ -1575,7 +1583,7 @@ class VersionedTable:
                     for c in df.columns
                 ]
             )
-            self._check_constraints(updated, "UPDATE(merge-on-read)")
+            self._check_constraints(updated, rules, "UPDATE(merge-on-read)")
             new_units = self._write_units(
                 self._as_logged(updated, self._schema(info)), info.partition_by
             )
@@ -1590,7 +1598,7 @@ class VersionedTable:
             for c, e in ((c, set_exprs.get(c)) for c in df.columns)
         ]
         updated = df.select(*cols)
-        self._check_constraints(updated, "UPDATE")
+        self._check_constraints(updated, rules, "UPDATE")
         new_units = self._write_units(
             self._as_logged(updated, self._schema(info)), info.partition_by
         )
@@ -1721,16 +1729,21 @@ class VersionedTable:
     def restore(self, version: int) -> VersionInfo:
         """Restore an earlier version as a NEW version (history kept —
         utils/delta_ops.py:167-204 semantics), with that version's table
-        properties (schema, skipping columns, rename mapping) and
-        per-unit skipping stats, bloom filters and row counts."""
+        properties (schema, skipping columns, rename mapping, rules) and
+        per-unit skipping stats, bloom filters and row counts. Identity
+        watermarks are the exception: they keep the head's, which never
+        move back, so no id is allocated twice."""
         target = self._resolve(version)
         for attempt in range(10):
             # the restored snapshot's units are byte-identical, so its
             # metadata — and any tombstones pending AT that version —
             # come along verbatim
+            head = self._head()
             xtra = {"restored_from": version, **self._carry(target, target.units)}
+            if "identity" in head.extra:
+                xtra["identity"] = head.extra["identity"]
             info = VersionInfo(
-                version=self.latest_version() + 1,
+                version=head.version + 1,
                 timestamp=time.time(),
                 operation="RESTORE",
                 mode=None,
@@ -1763,21 +1776,13 @@ class VersionedTable:
         the inodes survive until the last link drops.  The clone
         starts at version 0 with the snapshot's units, partitioning,
         table properties (schema, skipping columns, pending rename
-        mapping) and per-unit skipping stats, bloom filters and row
-        counts; pending
-        merge-on-read tombstones are carried too (they reference the
-        cloned units by identical relative paths).  CHECK constraints
-        and generated columns are copied — they are table metadata, not
-        data, and (like Delta) they are UNVERSIONED: the source's
-        CURRENT definitions apply.  For a version-pinned clone the
-        current metadata may postdate the snapshot, so the cloned data
-        is validated against each copied definition (one fused scan,
-        same as :meth:`add_constraint`); definitions the snapshot does
-        not satisfy — violated, or referencing columns absent at that
-        version — are NOT copied, and the dropped names are recorded in
-        the clone's version-0 ``extra["dropped_metadata"]`` (round-3
-        advisor item: a clone must never carry a constraint its own
-        data was never validated against).
+        mapping, and the rules: constraints, generated columns,
+        defaults, identity columns) and per-unit skipping stats, bloom
+        filters and row counts; pending merge-on-read tombstones are
+        carried too (they reference the cloned units by identical
+        relative paths). All of it comes from the cloned version's
+        manifest, so a version-pinned clone carries exactly the rules
+        its snapshot was written under and validates nothing.
         """
         src = self._resolve(version)
         dest = VersionedTable(self.spark, dest_path)
@@ -1791,66 +1796,6 @@ class VersionedTable:
                 os.makedirs(tgt, exist_ok=True)
                 for fn in files:
                     os.link(os.path.join(root, fn), os.path.join(tgt, fn))
-        cons = self.constraints()
-        gen = self.generated_columns()
-        dfl = self.column_defaults()
-        dropped: list[str] = []
-        latest = self._versions()[-1].version
-        if version is not None and src.version != latest and dfl:
-            # defaults carry no data invariant (they apply to FUTURE
-            # writes) — drop only those that no longer analyze against
-            # the snapshot schema
-            snap0 = self._apply_column_map(self._read_units(src, []), src)
-            for name, expr in list(dfl.items()):
-                try:
-                    snap0.select(F.expr(expr)).schema
-                    if name not in snap0.columns:
-                        raise ValueError(name)
-                except Exception:
-                    dropped.append(f"d:{name}")
-                    dfl.pop(name, None)
-        if version is not None and src.version != latest and (cons or gen):
-            # Current metadata may postdate this snapshot — keep only
-            # definitions the cloned data actually satisfies.  Analysis
-            # failures (columns absent at that version) drop outright;
-            # the survivors share ONE fused violation-count scan.
-            snap = self._apply_column_map(
-                self._read_with_deletes(src, src.units), src
-            )
-            checks: dict[str, str] = {}
-            for name, expr in cons.items():
-                checks[f"c:{name}"] = f"({expr}) IS FALSE"
-            for name, expr in gen.items():
-                checks[f"g:{name}"] = f"NOT ({name} <=> ({expr}))"
-            analyzable: dict[str, str] = {}
-            for key, pred in checks.items():
-                try:
-                    snap.select(F.expr(pred)).schema
-                    analyzable[key] = pred
-                except Exception:
-                    dropped.append(key)
-            if analyzable:
-                keys = list(analyzable)
-                counts = snap.agg(
-                    *[
-                        F.sum(F.expr(analyzable[k]).cast("long")).alias(f"k{i}")
-                        for i, k in enumerate(keys)
-                    ]
-                ).first()
-                dropped += [k for i, k in enumerate(keys) if counts[f"k{i}"]]
-            for key in dropped:
-                kind, name = key.split(":", 1)
-                # explicit dispatch: 'd:' keys from the defaults block
-                # share this list and must NOT pop a same-named
-                # generated column (ADVICE r4)
-                if kind == "c":
-                    cons.pop(name, None)
-                elif kind == "g":
-                    gen.pop(name, None)
-        xtra: dict = {"cloned_from": self.path, "source_version": src.version}
-        if dropped:
-            xtra["dropped_metadata"] = sorted(dropped)
-        xtra.update(self._carry(src, src.units))
         info = VersionInfo(
             version=0,
             timestamp=time.time(),
@@ -1858,24 +1803,13 @@ class VersionedTable:
             mode=None,
             units=list(src.units),
             partition_by=list(src.partition_by),
-            extra=xtra,
+            extra={
+                "cloned_from": self.path,
+                "source_version": src.version,
+                **self._carry(src, src.units),
+            },
         )
         dest._commit(info)
-        for side, dest_path_ in (
-            (cons, dest._constraints_path),
-            (gen, dest._generated_path),
-            (dfl, dest._defaults_path),
-            # identity metadata clones verbatim: the current watermark is
-            # ≥ every id in ANY snapshot, so a version-pinned clone can
-            # never re-allocate an existing value
-            (self.identity_columns(), dest._identity_path),
-        ):
-            if side:
-                os.makedirs(dest._vlog, exist_ok=True)
-                tmp = dest_path_ + f".{uuid.uuid4().hex}.tmp"
-                with open(tmp, "w") as f:
-                    json.dump(side, f)
-                os.replace(tmp, dest_path_)
         return dest
 
     # ---------------------------------------------------------- vacuum
@@ -2019,7 +1953,9 @@ class VersionedTable:
         carried over by reference (no IO). New source partitions land in
         the rewrite automatically.
         """
-        idents = self.identity_columns()
+        info = self._head()
+        rules = self._rules(info)
+        idents = rules.get("identity", {})
         ident_in_source = set(idents) & set(source.columns)
         if ident_in_source:
             raise ValueError(
@@ -2037,10 +1973,11 @@ class VersionedTable:
                     f"identity column(s) {sorted(bad)} cannot be merge "
                     "update targets"
                 )
-        if not self.exists():
-            return self.write(source, mode="overwrite", operation="MERGE", extra=extra)
-        info = self._require_no_column_map("merge")
         schema = self._schema(info)
+        if not schema.fields:
+            # nothing written yet
+            return self.write(source, mode="overwrite", operation="MERGE", extra=extra)
+        self._require_no_column_map("merge", info)
         cols = schema.fieldNames()
         update_columns = update_columns or [
             c for c in cols if c not in keys and c in source.columns
@@ -2111,15 +2048,21 @@ class VersionedTable:
         # Inserted rows (source-only, so their identity slot is NULL —
         # the source is barred from carrying it above) get fresh values;
         # matched/carried rows keep theirs.
+        identity = dict(idents)
         for name, spec in idents.items():
             if name in cols:
-                merged = self._assign_identity(merged, name, spec, only_null=True)
+                merged, identity[name] = self._assign_identity(
+                    merged, name, spec, only_null=True
+                )
 
-        self._check_constraints(merged, "MERGE")
+        self._check_constraints(merged, rules, "MERGE")
         new_units = self._write_units(self._as_logged(merged, schema), part_cols)
         return self._next(
             info, "MERGE", None, carried_units, new_units,
-            {**(extra or {}), "keys": keys, "pruned": prunable},
+            {
+                **(extra or {}), "keys": keys, "pruned": prunable,
+                **({"identity": identity} if identity else {}),
+            },
         )
 
     # ------------------------------------------------ idempotent writers

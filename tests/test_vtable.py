@@ -52,6 +52,27 @@ def test_restore_and_vacuum(spark, tmp_table_path):
     assert t.read().count() == 1  # current snapshot untouched
 
 
+def test_restore_brings_back_the_rules_of_its_version(spark, tmp_table_path):
+    """Rules are versioned with the rows they govern: restoring a version
+    from before a constraint restores its rule set too, so the restored
+    rows never sit under a constraint they violate."""
+    t = VersionedTable(spark, tmp_table_path)
+    t.write(_mk(spark, [{"id": 1, "v": -5.0}]), mode="overwrite")  # v0
+    t.write(_mk(spark, [{"id": 1, "v": 3.0}]), mode="overwrite")  # v1
+    t.add_constraint("v_pos", "v > 0")
+    constrained = t.latest_version()
+    t.restore(0)
+    assert {(r.id, r.v) for r in t.read().collect()} == {(1, -5.0)}
+    assert t.constraints() == {}
+    t.write(_mk(spark, [{"id": 2, "v": -1.0}]), mode="append")
+    assert t.read().count() == 2
+    # and back: the constrained version brings its constraint along
+    t.restore(constrained)
+    assert t.constraints() == {"v_pos": "v > 0"}
+    with pytest.raises(ValueError, match="v_pos"):
+        t.write(_mk(spark, [{"id": 3, "v": -1.0}]), mode="append")
+
+
 def test_compact(spark, tmp_table_path):
     t = VersionedTable(spark, tmp_table_path)
     df = _mk(spark, [{"id": i} for i in range(100)]).repartition(8)
@@ -190,6 +211,55 @@ def test_occ_merge_conflict_detected(spark, tmp_path):
         stale.merge(src, keys=["k"])
     # the concurrent append survived
     assert VersionedTable(spark, path).read().count() == 10
+
+
+def test_occ_rule_change_conflicts_with_blind_append(spark, tmp_path):
+    """A blind append rebases over a concurrent commit only while the
+    table's rules are unchanged. A constraint added, or an identity
+    range allocated, between its read and its commit raises
+    ConcurrentWriteError (Delta's MetadataChangedException): the rows
+    were checked and numbered under rules that no longer hold."""
+    from spark_delta_lakehouse_nyctaxi_spark.sources.table import ConcurrentWriteError
+
+    path = str(tmp_path / "rules")
+    VersionedTable(spark, path).write(_mk(spark, [{"id": 1, "v": 1.0}]), mode="overwrite")
+    stale = VersionedTable(spark, path)
+    orig_write_units = stale._write_units
+
+    def constrain_first(df, partition_by):
+        VersionedTable(spark, path).add_constraint("v_pos", "v > 0")
+        return orig_write_units(df, partition_by)
+
+    stale._write_units = constrain_first
+    with pytest.raises(ConcurrentWriteError):
+        stale.write(_mk(spark, [{"id": 2, "v": -1.0}]), mode="append")
+    fresh = VersionedTable(spark, path)
+    assert fresh.constraints() == {"v_pos": "v > 0"}
+    assert fresh.read().filter("NOT (v > 0)").count() == 0
+
+    # two interleaved identity-assigning appends: the loser raises, and
+    # its retry draws ids after the winner's
+    ipath = str(tmp_path / "ident")
+    t = VersionedTable(spark, ipath)
+    t.add_identity_column("row_id")
+    t.write(_mk(spark, [{"k": "a"}, {"k": "b"}]), mode="overwrite")
+    loser = VersionedTable(spark, ipath)
+    orig_write_units = loser._write_units
+
+    def winner_first(df, partition_by):
+        VersionedTable(spark, ipath).write(_mk(spark, [{"k": "c"}, {"k": "d"}]), mode="append")
+        return orig_write_units(df, partition_by)
+
+    loser._write_units = winner_first
+    with pytest.raises(ConcurrentWriteError):
+        loser.write(_mk(spark, [{"k": "e"}, {"k": "f"}]), mode="append")
+    loser._write_units = orig_write_units
+    loser.write(_mk(spark, [{"k": "e"}, {"k": "f"}]), mode="append")
+    ids = [r.row_id for r in t.read().collect()]
+    assert len(ids) == len(set(ids)) == 6
+    assert {(r.k, r.row_id) for r in t.read().collect()} == {
+        ("a", 1), ("b", 2), ("c", 3), ("d", 4), ("e", 5), ("f", 6)
+    }
 
 
 def test_changes_tags_net_diff(spark, tmp_table_path):
@@ -659,6 +729,37 @@ def test_check_constraints_enforced_on_all_write_paths(spark, tmp_table_path):
     assert t.read().count() == 4
 
 
+def test_rule_apis_commit_metadata_only_versions(spark, tmp_table_path):
+    """Every rule API commits one metadata-only version (Delta's ADD
+    CONSTRAINT in history): no data file changes, and the log directory
+    holds version files only — the rules live in the manifests."""
+    t = VersionedTable(spark, tmp_table_path)
+    t.add_identity_column("row_id")
+    assert t.latest_version() == 0
+    assert t.identity_columns() == {"row_id": {"start": 1, "step": 1, "watermark": 1}}
+    t.write(_mk(spark, [{"k": "a", "v": 1.0, "w": 2.0}]), mode="overwrite")
+    assert t.identity_columns()["row_id"]["watermark"] == 2
+    files = _data_files(tmp_table_path)
+    t.add_constraint("v_pos", "v > 0")
+    t.add_generated_column("w", "v * 2")
+    t.add_column_default("v", "1.0")
+    assert (t.constraints(), t.generated_columns(), t.column_defaults()) == (
+        {"v_pos": "v > 0"}, {"w": "v * 2"}, {"v": "1.0"}
+    )
+    t.drop_column_default("v")
+    t.drop_generated_column("w")
+    t.drop_constraint("v_pos")
+    t.drop_constraint("v_pos")  # nothing to drop: no commit
+    assert [h["operation"] for h in reversed(t.history())] == [
+        "ADD IDENTITY COLUMN", "WRITE", "ADD CONSTRAINT", "ADD GENERATED COLUMN",
+        "SET DEFAULT", "DROP DEFAULT", "DROP GENERATED COLUMN", "DROP CONSTRAINT",
+    ]
+    assert (t.constraints(), t.generated_columns(), t.column_defaults()) == ({}, {}, {})
+    assert _data_files(tmp_table_path) == files
+    assert all(t._is_version_file(f) for f in os.listdir(t._vlog))
+    assert {(r.k, r.row_id) for r in t.read().collect()} == {("a", 1)}
+
+
 def test_partition_layout_evolution_across_appends(spark, tmp_table_path):
     """Layout evolution without rewrite: an append may introduce (or
     change) partitioning — old commits keep their layout on disk, reads
@@ -1015,9 +1116,10 @@ def test_rename_guards_generated_columns(spark, tmp_table_path):
 
 
 def test_version_pinned_clone_validates_copied_metadata(spark, tmp_table_path):
-    """Constraint/generated metadata is unversioned; a version-pinned
-    clone must not carry definitions its snapshot violates or cannot
-    analyze (round-3 advisor item)."""
+    """Constraint/generated metadata is versioned with the snapshot; a
+    version-pinned clone carries exactly the definitions logged at its
+    version, so never one its snapshot violates or cannot analyze
+    (round-3 advisor item)."""
     t = VersionedTable(spark, tmp_table_path)
     t.write(_mk(spark, [{"id": 1, "v": -5.0}]), mode="overwrite")  # v0
     # evolve: overwrite with positive values + a new column, then
@@ -1037,11 +1139,38 @@ def test_version_pinned_clone_validates_copied_metadata(spark, tmp_table_path):
     c_v0 = t.clone(tmp_table_path + "_v0", version=0)
     assert c_v0.constraints() == {}
     assert c_v0.generated_columns() == {}
-    dropped = c_v0._versions()[0].extra["dropped_metadata"]
-    assert set(dropped) == {"c:v_pos", "c:w_known", "g:w"}
+    # pinned between the two add_constraint commits: v_pos, not w_known
+    c_mid = t.clone(tmp_table_path + "_mid", version=2)
+    assert c_mid.constraints() == {"v_pos": "v > 0"}
+    assert c_mid.generated_columns() == {}
     # the clone's data is usable and append is unconstrained
     c_v0.write(_mk(spark, [{"id": 2, "v": -1.0}]), mode="append")
     assert c_v0.read().count() == 2
+
+
+def test_version_pinned_clone_takes_its_rules_without_a_spark_job(spark, tmp_table_path):
+    """A version-pinned clone takes the rules logged at that version, so
+    it re-validates nothing: no Spark job runs, whatever rules the
+    source added since."""
+    t = VersionedTable(spark, tmp_table_path)
+    rows = spark.range(1000).selectExpr("id", "CAST(id + 1 AS DOUBLE) AS v")
+    t.write(rows, mode="overwrite")  # v0
+    t.write(rows, mode="append")
+    t.add_constraint("v_pos", "v > 0")
+    constrained = t.latest_version()
+    t.write(rows, mode="append")
+    sc = spark.sparkContext
+    for version, rules in ((0, {}), (constrained, {"v_pos": "v > 0"})):
+        group = f"pinned-clone-{version}-{os.getpid()}"
+        sc.setJobGroup(group, f"clone pinned at version {version}")
+        try:
+            c = t.clone(f"{tmp_table_path}_v{version}", version=version)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+        assert c.constraints() == rules
+        assert c.read().count() == t.read(version=version).count()
 
 
 # ---------------------------------------------- identity columns (r4)
@@ -1230,10 +1359,13 @@ def test_column_defaults(spark, tmp_table_path):
     assert c_latest.column_defaults() == {"w": "v + 1.0"}
     c_latest.write(_mk(spark, [{"id": 2, "v": 3.0}]), mode="append")
     assert {(r.id, r.w) for r in c_latest.read().collect()} == {(1, 2.0), (2, 4.0)}
-    # version-pinned clone: w absent at v0 → default dropped + recorded
+    # version-pinned clone: the defaults logged at that version, none
+    # at v0 (w absent), the registered one at v2
     c_v0 = t2.clone(tmp_table_path + "_dflv0", version=0)
     assert c_v0.column_defaults() == {}
-    assert "d:w" in c_v0._versions()[0].extra["dropped_metadata"]
+    assert t2.clone(tmp_table_path + "_dflv2", version=2).column_defaults() == {
+        "w": "v + 1.0"
+    }
     t2.drop_column_default("w")
     assert t2.column_defaults() == {}
 
