@@ -83,7 +83,7 @@ class _StagedTable(_Staged):
     def _append(self) -> None:
         if self.pending:
             df = self.spark.createDataFrame(self.pending, schema=self.SCHEMA)
-            self.table.write(df, mode="append" if self.table.exists() else "overwrite")
+            self.table.write(df, mode="append")
             self.pending = []  # only once durable: a failed append keeps them
 
 
@@ -241,10 +241,8 @@ class PipelineMetrics(_Staged):
             metrics_json=json.dumps(self.layers),
             created_at=time.time(),
         )
-        t = VersionedTable(self.spark, self.path)
-        t.write(
-            self.spark.createDataFrame([row]),
-            mode="append" if t.exists() else "overwrite",
+        VersionedTable(self.spark, self.path).write(
+            self.spark.createDataFrame([row]), mode="append"
         )
 
     def commit(self) -> None:

@@ -71,7 +71,7 @@ def incremental_append(
     inc = filter_incremental(source, wm, watermark_col, initial_load_start)
     n = inc.count()
     if n:
-        table.write(inc, mode="append" if table.exists() else "overwrite")
+        table.write(inc, mode="append")
     return {"watermark": wm, "rows_appended": n}
 
 

@@ -43,14 +43,17 @@ so their cost does not grow with history.
 
 Concurrency follows Delta's optimistic protocol: a commit is a
 put-if-absent of ``<version>.json`` (``os.link`` — atomic on POSIX,
-fails EEXIST if another writer won the version). Losers refresh the
-snapshot and retry: blind writes (write/restore) rebase automatically,
-a write only while the table's rules are unchanged (Delta raises
-``MetadataChangedException`` there), and rule changes re-validate
-against the new snapshot; read-modify-write operations (merge/compact)
-raise :class:`ConcurrentWriteError` because their data was derived
-from a stale snapshot — the caller re-runs on the new snapshot,
-exactly Delta's conflict-detection semantics.
+fails EEXIST if another writer won the version). Every writer commits
+through one path, :meth:`VersionedTable._next`, on the version it read.
+A writer whose data came from that version — merge, update, delete,
+replace_where, compact, materialize_rename — raises
+:class:`ConcurrentWriteError` when another commit lands first, and the
+caller re-runs it on the new snapshot (Delta's conflict detection).
+Blind writes (write, restore) and metadata changes (rule changes,
+rename_column) instead re-read the head and run their commit step again
+(:meth:`VersionedTable._retry`): a write rebases only while the table's
+rules are unchanged (Delta raises ``MetadataChangedException`` there),
+and a metadata change re-validates against the new head.
 """
 
 from __future__ import annotations
@@ -303,16 +306,21 @@ class VersionedTable:
         new_units: list[str],
         extra: dict,
         tombstone: str | None = None,
+        partition_by: list[str] | None = None,
+        source: VersionInfo | None = None,
     ) -> VersionInfo:
-        """Commit the version after ``info``, keeping its ``carried``
-        units by reference with their metadata (:meth:`_carry`; entries
-        in ``extra`` override its properties) and adding ``new_units``.
-        With ``tombstone``, the predicate also commits as a merge-on-read
-        delete scoped to all of ``info``'s units. The version is pinned:
-        the caller derived its data from ``info``, so a concurrent
-        commit in between must raise :class:`ConcurrentWriteError`, not
-        be silently overwritten."""
-        xtra = {**self._carry(info, carried), **extra}
+        """Commit the version after ``info`` — the only commit path.
+        It keeps the ``carried`` units of ``source`` (default ``info``)
+        by reference with their metadata and ``source``'s table
+        properties (:meth:`_carry`; entries in ``extra`` override them),
+        adds ``new_units``, and is laid out by ``partition_by`` (default
+        ``source``'s). With ``tombstone``, the predicate also commits as
+        a merge-on-read delete scoped to all of ``info``'s units. The
+        version is pinned: a concurrent commit since ``info`` raises
+        :class:`ConcurrentWriteError` and is never silently overwritten;
+        callers that may rebase re-run through :meth:`_retry`."""
+        source = source or info
+        xtra = {**self._carry(source, carried), **extra}
         if tombstone is not None:
             xtra["mor_deletes"] = xtra.get("mor_deletes", []) + [
                 {"pred": tombstone, "units": list(info.units)}
@@ -323,11 +331,28 @@ class VersionedTable:
             operation=operation,
             mode=mode,
             units=carried + new_units,
-            partition_by=list(info.partition_by),
+            partition_by=list(source.partition_by if partition_by is None else partition_by),
             extra=xtra,
         )
         self._commit(vinfo)
         return vinfo
+
+    def _retry(self, step, head: VersionInfo | None = None):
+        """``step(head)`` on ``head`` (default the latest version), run
+        again on the new head while a concurrent commit moves it (ten
+        runs at most) — for the writers that rebase or re-validate
+        rather than fail. A :class:`ConcurrentWriteError` the step raises
+        on an unmoved head (a blind write whose rules changed)
+        propagates at once."""
+        head = head or self._head()
+        for attempt in range(10):
+            try:
+                return step(head)
+            except ConcurrentWriteError:
+                moved = self._head()
+                if attempt == 9 or moved.version == head.version:
+                    raise
+                head = moved
 
     def _resolve(self, version: int | None = None, timestamp: float | None = None) -> VersionInfo:
         vs = self._versions()
@@ -379,8 +404,8 @@ class VersionedTable:
         against the head the commit builds on; the commit is pinned to
         that head, so a concurrent commit re-reads the head and
         validates again (as :meth:`rename_column` does)."""
-        for attempt in range(10):
-            head = self._head()
+
+        def step(head: VersionInfo) -> None:
             rules = dict(head.extra.get(key, {}))
             if value is None:
                 if name not in rules:
@@ -390,12 +415,9 @@ class VersionedTable:
                 if validate is not None:
                     validate(head)
                 rules[name] = value
-            try:
-                self._next(head, operation, None, head.units, [], {key: rules})
-                return
-            except ConcurrentWriteError:
-                if attempt == 9:
-                    raise
+            self._next(head, operation, None, head.units, [], {key: rules})
+
+        self._retry(step)
 
     def constraints(self) -> dict[str, str]:
         """CHECK constraints of the latest version (Delta ``ALTER TABLE
@@ -615,9 +637,7 @@ class VersionedTable:
 
         self._set_rule("ADD GENERATED COLUMN", "generated", name, expr, validate)
 
-    def _fill(
-        self, df: DataFrame, rules: dict, identity_supplied_ok: bool = False
-    ) -> tuple[DataFrame, dict]:
+    def _fill(self, df: DataFrame, rules: dict) -> tuple[DataFrame, dict]:
         """``df`` with the columns it omits filled under ``rules``:
         defaults, then generated columns (present ones are validated by
         :meth:`_check_constraints`), then identity values; and the
@@ -631,7 +651,7 @@ class VersionedTable:
         for name, spec in rules.get("identity", {}).items():
             if name not in df.columns:
                 df, spec = self._assign_identity(df, name, spec)
-            elif not identity_supplied_ok:
+            else:
                 raise ValueError(
                     f"column {name!r} is GENERATED ALWAYS AS IDENTITY "
                     "and cannot be supplied; omit it and values are "
@@ -782,9 +802,10 @@ class VersionedTable:
         stats_cols: list[str] | None,
         bloom_cols: list[str] | None,
     ) -> dict:
-        """The table properties a write commits. An overwrite (no
-        ``head``) takes the frame's ``schema`` and the given skipping
-        columns; an append (or a compaction) extends ``head``'s: columns
+        """The table properties a write commits. A rewrite (no ``head``)
+        takes the frame's ``schema`` and the given skipping columns, and
+        clears any rename mapping, as its files store the frame's names;
+        an append (or a compaction) extends ``head``'s: columns
         the frame adds (``merge_schema``) follow the logged data columns,
         and the given skipping columns join the logged ones. The schema
         is in the parquet reader's order — data columns, then
@@ -807,11 +828,12 @@ class VersionedTable:
             logged = head.extra.get(key, []) if head else []
             return [c for c in dict.fromkeys([*logged, *(given or [])]) if c in names]
 
-        return {
+        props = {
             "schema": StructType(fields).json(),
             "stats_cols": cols("stats_cols", stats_cols),
             "bloom_cols": cols("bloom_cols", bloom_cols),
         }
+        return props if head else {**props, "column_map": {}}
 
     @staticmethod
     def _jsonable(v):
@@ -960,7 +982,6 @@ class VersionedTable:
         merge_schema: bool = False,
         stats_cols: list[str] | None = None,
         bloom_cols: list[str] | None = None,
-        _identity_supplied_ok: bool = False,
     ) -> VersionInfo:
         """Reference parity: write_*_delta (etl/bronze_job.py:60-91) —
         modes overwrite/append, optional partitionBy.
@@ -980,21 +1001,28 @@ class VersionedTable:
         table's skipping columns on overwrite and extend them on
         append; every writer stats and blooms the units it adds for
         them. Both modes keep the table's rules (constraints, generated
-        columns, defaults, identity columns)."""
+        columns, defaults, identity columns).
+
+        A blind write: when another commit lands first, the write
+        rebases onto it — an append keeps the winner's units and
+        properties, an overwrite replaces them — unless the winner
+        changed the rules the rows were filled and checked under, which
+        raises :class:`ConcurrentWriteError` (Delta's
+        ``MetadataChangedException``). A missing table is created by
+        either mode."""
         if mode not in ("overwrite", "append"):
             raise ValueError(f"unsupported mode {mode!r}")
         cur = self._head()
         rules = self._rules(cur)
         # fill missing default, generated and identity columns BEFORE the
         # append schema comparison (an appender may legitimately omit them)
-        df, identity = self._fill(df, rules, _identity_supplied_ok)
-        head = cur if mode == "append" else None
-        if head is not None:
-            partition_by = partition_by or head.partition_by
-            m = self._column_map_of(head)
-            existing = {m.get(f.name, f.name) for f in self._schema(head).fields}
-            # a head that logs no column yet (rules registered before
-            # the first write) takes the frame's schema
+        df, identity = self._fill(df, rules)
+        if mode == "append":
+            partition_by = partition_by or cur.partition_by
+            m = self._column_map_of(cur)
+            existing = {m.get(f.name, f.name) for f in self._schema(cur).fields}
+            # a head that logs no column yet (a missing table, or rules
+            # registered before the first write) takes the frame's schema
             if existing and set(df.columns) != existing and not merge_schema:
                 added = sorted(set(df.columns) - existing)
                 missing = sorted(existing - set(df.columns))
@@ -1004,55 +1032,35 @@ class VersionedTable:
                 )
             # appended frames arrive under LOGICAL names; files store
             # physical ones so all units stay name-uniform
-            df = self._as_logged(self._to_physical(df, head), self._schema(head))
+            df = self._as_logged(self._to_physical(df, cur), self._schema(cur))
             inv = {l: p for p, l in m.items()}
             stats_cols = [inv.get(c, c) for c in stats_cols or []]
             bloom_cols = [inv.get(c, c) for c in bloom_cols or []]
         self._check_constraints(df, rules, f"write({mode})")
-        props = self._props(head, df.schema, partition_by, stats_cols, bloom_cols)
         new_units = self._write_units(df, partition_by)
-        # Optimistic commit: the data units above are immutable and
-        # uuid-named, so on a version conflict only the manifest needs
-        # rebuilding against the refreshed snapshot (blind writes
-        # rebase; appends pick up the winner's units and properties) —
-        # unless the winner changed the rules the rows were filled and
-        # checked under.
-        for attempt in range(10):
-            xtra = dict(extra or {})
-            units = new_units
-            if head is not None:
-                # carried units keep their metadata, and pending
-                # merge-on-read tombstones stay scoped to them: the
-                # appended rows are never filtered
-                xtra.update(self._carry(head, head.units))
-                units = head.units + new_units
-            # an overwrite keeps the rules too
-            xtra.update({**rules, **identity, **props})
-            info = VersionInfo(
-                version=cur.version + 1,
-                timestamp=time.time(),
-                operation=operation,
-                mode=mode,
-                units=units,
+
+        # the data units above are immutable and uuid-named, so a lost
+        # race only rebuilds the manifest on the new head
+        def commit(head: VersionInfo) -> VersionInfo:
+            if self._rules(head) != rules:
+                raise ConcurrentWriteError(
+                    f"version {head.version} at {self.path} changed the "
+                    "table rules this write was checked against; re-run "
+                    "it on the new snapshot"
+                )
+            # an append carries the head's units with their metadata, and
+            # pending merge-on-read tombstones stay scoped to them (the
+            # appended rows are never filtered); an overwrite carries only
+            # the table properties, the rules among them
+            base = head if mode == "append" else None
+            props = self._props(base, df.schema, partition_by, stats_cols, bloom_cols)
+            return self._next(
+                head, operation, mode, head.units if base else [], new_units,
+                {**(extra or {}), **identity, **props},
                 partition_by=list(partition_by or []),
-                extra=xtra,
             )
-            try:
-                self._commit(info)
-                return info
-            except ConcurrentWriteError:
-                if attempt == 9:
-                    raise
-                cur = self._head()
-                if self._rules(cur) != rules:
-                    # Delta's MetadataChangedException
-                    raise ConcurrentWriteError(
-                        f"version {cur.version} at {self.path} changed the "
-                        "table rules this write was checked against; re-run "
-                        "it on the new snapshot"
-                    ) from None
-                head = cur if mode == "append" else None
-                props = self._props(head, df.schema, partition_by, stats_cols, bloom_cols)
+
+        return self._retry(commit, cur)
 
     # ------------------------------------------------------------ read
 
@@ -1180,11 +1188,12 @@ class VersionedTable:
         for name in (old, new):
             if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
                 raise ValueError(f"not a simple identifier: {name!r}")
-        for attempt in range(10):
-            vs = self._versions()
-            if not vs:
+
+        # a metadata-only commit: on a lost race, validate again on the
+        # new head
+        def step(info: VersionInfo) -> VersionInfo:
+            if info.version < 0:
                 raise ValueError("cannot rename a column of an empty table")
-            info = vs[-1]
             if info.extra.get("mor_deletes"):
                 raise ValueError(
                     "pending merge-on-read tombstones reference storage "
@@ -1238,61 +1247,58 @@ class VersionedTable:
             m.pop(phys, None)
             if new != phys:
                 m[phys] = new
-            try:
-                return self._next(
-                    info, "RENAME COLUMN", None, info.units, [], {"column_map": m}
-                )
-            except ConcurrentWriteError:
-                if attempt == 9:
-                    raise
+            return self._next(
+                info, "RENAME COLUMN", None, info.units, [], {"column_map": m}
+            )
+
+        return self._retry(step)
 
     def materialize_rename(self) -> VersionInfo:
         """Rewrite the snapshot with logical column names and clear the
         mapping — the explicit rewrite that re-enables DML after
-        :meth:`rename_column`.  Validates that every CHECK constraint
-        still analyzes against the new names (constraints bind to the
-        names they were written with; a constraint referencing the old
-        name must be dropped and re-added)."""
+        :meth:`rename_column`.  Validates first that every CHECK
+        constraint and generated column still analyzes against the new
+        names (they bind to the names they were written with; one that
+        references an old name must be dropped and re-added). The rows
+        themselves are not re-checked: only their column names change,
+        and they satisfied the rules when they were written.
+
+        A read-modify-write pinned to the version it read: a commit that
+        lands first raises :class:`ConcurrentWriteError`, and the caller
+        re-runs it on the new snapshot."""
         info = self._resolve()
         m = self._column_map_of(info)
         if not m:
             return info
-        df = self.read()  # logical names
-        for name, expr in info.extra.get("constraints", {}).items():
-            try:
-                # select, not filter: Spark 4's hidden-output resolution
-                # lets a FILTER see the pre-rename child columns through
-                # the projection, which would mask the stale reference;
-                # .schema forces analysis
-                df.select(F.expr(expr)).schema
-            except Exception:
-                raise ValueError(
-                    f"constraint {name!r} ({expr}) references a renamed "
-                    "column; drop_constraint and re-add it under the new "
-                    "name before materializing"
-                ) from None
-        # Generated columns get the same guided validation (round-3
-        # advisor item): after materialization the logical names are the
-        # storage names, so an expression referencing a pre-rename name
-        # would fail opaquely inside _fill on the next append.
-        for name, expr in info.extra.get("generated", {}).items():
-            try:
-                df.select(F.expr(expr)).schema
-            except Exception:
-                raise ValueError(
-                    f"generated column {name!r} ({expr}) references a "
-                    "renamed column; drop_generated_column and re-add it "
-                    "under the new name before materializing"
-                ) from None
+        # logical names
+        df = self._apply_column_map(self._read_with_deletes(info, info.units), info)
+        for key, what, drop in (
+            ("constraints", "constraint", "drop_constraint"),
+            ("generated", "generated column", "drop_generated_column"),
+        ):
+            for name, expr in info.extra.get(key, {}).items():
+                try:
+                    # select, not filter: Spark 4's hidden-output
+                    # resolution lets a FILTER see the pre-rename child
+                    # columns through the projection, which would mask
+                    # the stale reference; .schema forces analysis
+                    df.select(F.expr(expr)).schema
+                except Exception:
+                    raise ValueError(
+                        f"{what} {name!r} ({expr}) references a renamed "
+                        f"column; {drop} and re-add it under the new name "
+                        "before materializing"
+                    ) from None
         part_logical = [m.get(p, p) for p in info.partition_by]
-        return self.write(
-            df,
-            mode="overwrite",
-            partition_by=part_logical or None,
-            operation="MATERIALIZE RENAME",
-            stats_cols=[m.get(c, c) for c in info.extra.get("stats_cols", [])],
-            bloom_cols=[m.get(c, c) for c in info.extra.get("bloom_cols", [])],
-            _identity_supplied_ok=True,  # internal rewrite keeps ids
+        props = self._props(
+            None, df.schema, part_logical,
+            [m.get(c, c) for c in info.extra.get("stats_cols", [])],
+            [m.get(c, c) for c in info.extra.get("bloom_cols", [])],
+        )
+        new_units = self._write_units(df, part_logical)
+        return self._next(
+            info, "MATERIALIZE RENAME", "overwrite", [], new_units, props,
+            partition_by=part_logical,
         )
 
     def read(self, version: int | None = None, timestamp: float | None = None) -> DataFrame:
@@ -1409,6 +1415,33 @@ class VersionedTable:
             df = df.filter(F.col(col) == F.lit(v))
         return self._apply_column_map(df, info)
 
+    def _matched_units(self, info: VersionInfo, condition: str) -> tuple[list[str], list[str]]:
+        """Split ``info``'s units into (touched, carried): those holding
+        a row that matches ``condition``, and the rest. Touched units
+        are derived from the actual files that hold matching rows
+        (input_file_name), not from re-encoding partition values as
+        strings — str(value) diverges from Spark's partition-path
+        encoding for NULLs (__HIVE_DEFAULT_PARTITION__), URL-escaped
+        characters, and float/timestamp formatting. File paths are
+        metadata-sized (one row per file, same cardinality as Delta's
+        file stats)."""
+        from urllib.parse import unquote, urlparse
+
+        matched_files = {
+            unquote(urlparse(r["_f"]).path)
+            for r in self._read_with_deletes(info, info.units)
+            .filter(condition)
+            .select(F.input_file_name().alias("_f"))
+            .distinct()
+            .collect()
+        }
+        touched, carried = [], []
+        for u in info.units:
+            prefix = os.path.abspath(os.path.join(self._data, u)) + os.sep
+            (touched if any(f.startswith(prefix) for f in matched_files)
+             else carried).append(u)
+        return touched, carried
+
     def delete(self, condition: str, mode: str = "copy-on-write") -> VersionInfo:
         """Delta ``DELETE WHERE`` analog.
 
@@ -1443,30 +1476,7 @@ class VersionedTable:
         # `NOT (cond)` would silently drop them.
         keep_pred = f"NOT coalesce(({condition}), false)"
         if part_cols:
-            # Touched units are derived from the actual files that hold
-            # matching rows (input_file_name), not from re-encoding
-            # partition values as strings — str(value) diverges from
-            # Spark's partition-path encoding for NULLs
-            # (__HIVE_DEFAULT_PARTITION__), URL-escaped characters, and
-            # float/timestamp formatting. File paths are metadata-sized
-            # (one row per file, same cardinality as Delta's file stats).
-            from urllib.parse import unquote, urlparse
-
-            matched_files = {
-                unquote(urlparse(r["_f"]).path)
-                for r in self.read()
-                .filter(condition)
-                .select(F.input_file_name().alias("_f"))
-                .distinct()
-                .collect()
-            }
-            touched_units, carried = [], []
-            for u in info.units:
-                prefix = os.path.abspath(os.path.join(self._data, u)) + os.sep
-                if any(f.startswith(prefix) for f in matched_files):
-                    touched_units.append(u)
-                else:
-                    carried.append(u)
+            touched_units, carried = self._matched_units(info, condition)
             if not touched_units:
                 return info  # nothing matched; current snapshot stands
             # read THROUGH pending merge-on-read tombstones — a raw unit
@@ -1475,7 +1485,7 @@ class VersionedTable:
             kept = self._read_with_deletes(info, touched_units).filter(keep_pred)
         else:
             carried = []
-            kept = self.read().filter(keep_pred)
+            kept = self._read_with_deletes(info, info.units).filter(keep_pred)
         new_units = self._write_units(kept, part_cols)
         return self._next(info, "DELETE", None, carried, new_units, {"condition": condition})
 
@@ -1497,8 +1507,6 @@ class VersionedTable:
         merge-on-read tombstones intact; only matching units are
         rewritten. Defaults / generated / identity columns apply to the
         incoming frame exactly as in :meth:`write`."""
-        from urllib.parse import unquote, urlparse
-
         info = self._require_no_column_map("replace_where")
         rules = self._rules(info)
         df, identity = self._fill(df, rules)
@@ -1518,19 +1526,7 @@ class VersionedTable:
             )
         self._check_constraints(df, rules, "REPLACE WHERE")
         part_cols = info.partition_by
-        matched_files = {
-            unquote(urlparse(r["_f"]).path)
-            for r in self.read()
-            .filter(condition)
-            .select(F.input_file_name().alias("_f"))
-            .distinct()
-            .collect()
-        }
-        touched, carried = [], []
-        for u in info.units:
-            prefix = os.path.abspath(os.path.join(self._data, u)) + os.sep
-            (touched if any(f.startswith(prefix) for f in matched_files)
-             else carried).append(u)
+        touched, carried = self._matched_units(info, condition)
         keep_pred = f"NOT coalesce(({condition}), false)"
         new_units: list[str] = []
         if touched:
@@ -1574,7 +1570,7 @@ class VersionedTable:
                 f"column(s) {sorted(bad_ident)} are GENERATED ALWAYS AS "
                 "IDENTITY and cannot be updated"
             )
-        df = self.read()
+        df = self._read_with_deletes(info, info.units)
         if mode == "merge-on-read":
             matched = df.filter(F.expr(f"coalesce(({condition}), false)"))
             updated = matched.select(
@@ -1732,33 +1728,23 @@ class VersionedTable:
         properties (schema, skipping columns, rename mapping, rules) and
         per-unit skipping stats, bloom filters and row counts. Identity
         watermarks are the exception: they keep the head's, which never
-        move back, so no id is allocated twice."""
+        move back, so no id is allocated twice.
+
+        A blind write of an existing snapshot: when another commit lands
+        first, the restore rebases onto the new head."""
         target = self._resolve(version)
-        for attempt in range(10):
-            # the restored snapshot's units are byte-identical, so its
-            # metadata — and any tombstones pending AT that version —
-            # come along verbatim
-            head = self._head()
-            xtra = {"restored_from": version, **self._carry(target, target.units)}
-            if "identity" in head.extra:
-                xtra["identity"] = head.extra["identity"]
-            info = VersionInfo(
-                version=head.version + 1,
-                timestamp=time.time(),
-                operation="RESTORE",
-                mode=None,
-                units=list(target.units),
-                partition_by=list(target.partition_by),
-                extra=xtra,
+
+        # the restored snapshot's units are byte-identical, so its
+        # metadata — and any tombstones pending AT that version — come
+        # along verbatim
+        def commit(head: VersionInfo) -> VersionInfo:
+            ident = {"identity": head.extra["identity"]} if "identity" in head.extra else {}
+            return self._next(
+                head, "RESTORE", None, target.units, [],
+                {"restored_from": version, **ident}, source=target,
             )
-            try:
-                self._commit(info)
-                return info
-            except ConcurrentWriteError:
-                # restore is a blind write of an existing snapshot —
-                # rebase onto the new head and retry
-                if attempt == 9:
-                    raise
+
+        return self._retry(commit)
 
     # ----------------------------------------------------------- clone
 
@@ -1796,20 +1782,11 @@ class VersionedTable:
                 os.makedirs(tgt, exist_ok=True)
                 for fn in files:
                     os.link(os.path.join(root, fn), os.path.join(tgt, fn))
-        info = VersionInfo(
-            version=0,
-            timestamp=time.time(),
-            operation="CLONE",
-            mode=None,
-            units=list(src.units),
-            partition_by=list(src.partition_by),
-            extra={
-                "cloned_from": self.path,
-                "source_version": src.version,
-                **self._carry(src, src.units),
-            },
+        dest._next(
+            dest._head(), "CLONE", None, src.units, [],
+            {"cloned_from": self.path, "source_version": src.version},
+            source=src,
         )
-        dest._commit(info)
         return dest
 
     # ---------------------------------------------------------- vacuum
@@ -1994,7 +1971,7 @@ class VersionedTable:
             target = self._read_with_deletes(info, touched_units)
         else:
             carried_units = []
-            target = self.read()
+            target = self._read_with_deletes(info, info.units)
 
         # Literal markers (not key-nullness) detect row presence after the
         # full-outer join — the join matches NULL keys via eqNullSafe, so

@@ -143,6 +143,28 @@ def test_incremental_append_and_merge(spark, tmp_table_path):
     assert got == {1: "a", 2: "b2", 3: "c"}
 
 
+def test_incremental_append_onto_missing_table_keeps_concurrent_first_writer(
+    spark, tmp_table_path
+):
+    """incremental_append onto a table that does not exist yet appends
+    (``write(mode="append")`` creates the table): a first writer that
+    commits while it writes is rebased onto, not overwritten, so both
+    rows survive."""
+    t = VersionedTable(spark, tmp_table_path)
+    orig_write_units = t._write_units
+
+    def first_writer_lands(df, partition_by):
+        VersionedTable(spark, tmp_table_path).write(
+            spark.createDataFrame([Row(id=10, ts=10)]), mode="append"
+        )
+        return orig_write_units(df, partition_by)
+
+    t._write_units = first_writer_lands
+    incremental_append(t, spark.createDataFrame([Row(id=20, ts=20)]), "ts")
+    assert sorted(r.id for r in t.read().collect()) == [10, 20]
+    assert [h["mode"] for h in t.history()] == ["append", "append"]
+
+
 def test_dag_retry_and_skip():
     calls = {"flaky": 0}
 

@@ -262,6 +262,106 @@ def test_occ_rule_change_conflicts_with_blind_append(spark, tmp_path):
     }
 
 
+def test_occ_materialize_rename_conflict_detected(spark, tmp_path):
+    """materialize_rename is a read-modify-write: an append that lands
+    between its read and its commit makes it raise instead of being
+    dropped by a rebase, and a retry on the new snapshot keeps every
+    row and clears the mapping."""
+    from spark_delta_lakehouse_nyctaxi_spark.sources.table import ConcurrentWriteError
+
+    path = str(tmp_path / "occ_rename")
+    t = VersionedTable(spark, path)
+    t.write(_mk(spark, [{"id": 1, "v": 1.0}, {"id": 2, "v": 2.0}]), mode="overwrite")
+    t.rename_column("v", "value")
+    stale = VersionedTable(spark, path)
+    orig_write_units = stale._write_units
+
+    def hijack(df, partition_by):
+        VersionedTable(spark, path).write(
+            _mk(spark, [{"id": 3, "value": 3.0}]), mode="append"
+        )
+        return orig_write_units(df, partition_by)
+
+    stale._write_units = hijack
+    with pytest.raises(ConcurrentWriteError):
+        stale.materialize_rename()
+    assert sorted(r.id for r in t.read().collect()) == [1, 2, 3]
+    stale._write_units = orig_write_units
+    stale.materialize_rename()
+    assert t.detail()["column_mapping"] == {}
+    assert sorted((r.id, r.value) for r in t.read().collect()) == [
+        (1, 1.0), (2, 2.0), (3, 3.0)
+    ]
+
+
+def test_crash_before_commit_link_keeps_snapshot_and_retry_converges(spark, tmp_path):
+    """Every writer commits through one point. A crash there, before the
+    manifest link, leaves the latest version and its rows as they were;
+    re-running the operation reaches the post-op snapshot; and the
+    crashed attempt's commit dir, which no version lists, is what vacuum
+    collects."""
+    path = str(tmp_path / "crash")
+    t = VersionedTable(spark, path)
+    t.write(
+        _mk(spark, [{"id": i, "v": float(i), "p": i % 2} for i in range(4)]),
+        mode="overwrite", partition_by=["p"],
+    )
+
+    def rows():
+        return sorted(tuple(r) for r in t.read().drop("p").collect())
+
+    def listed_roots():
+        return {u.split("/", 1)[0] for v in t._versions() for u in v.units}
+
+    def crash(info):
+        raise OSError("crash before the commit link")
+
+    s0 = [(0, 0.0), (1, 1.0), (2, 2.0), (3, 3.0)]
+    s_compacted = [(1, 10.0), (2, 3.0), (3, 3.0), (4, 4.0), (5, 5.0)]
+    ops = [
+        ("append", lambda: t.write(_mk(spark, [{"id": 4, "v": 4.0, "p": 0}]), mode="append"),
+         s0 + [(4, 4.0)]),
+        ("merge", lambda: t.merge(
+            _mk(spark, [{"id": 1, "v": 10.0, "p": 1}, {"id": 5, "v": 5.0, "p": 1}]), keys=["id"]),
+         [(0, 0.0), (1, 10.0), (2, 2.0), (3, 3.0), (4, 4.0), (5, 5.0)]),
+        ("update", lambda: t.update({"v": "v + 1"}, "id = 2"),
+         [(0, 0.0), (1, 10.0), (2, 3.0), (3, 3.0), (4, 4.0), (5, 5.0)]),
+        ("delete", lambda: t.delete("id = 0"), s_compacted),
+        ("compact", lambda: t.compact(), s_compacted),
+        ("overwrite", lambda: t.write(
+            _mk(spark, [{"id": 7, "v": 7.0, "p": 1}]), mode="overwrite", partition_by=["p"]),
+         [(7, 7.0)]),
+        ("restore", lambda: t.restore(5), s_compacted),
+        ("materialize_rename", lambda: t.materialize_rename(), s_compacted),
+    ]
+    orphans = set()
+    for name, op, expected in ops:
+        if name == "materialize_rename":
+            t.rename_column("v", "value")
+        version, before = t.latest_version(), rows()
+        roots = set(os.listdir(t._data))
+        t._commit = crash
+        try:
+            with pytest.raises(OSError, match="crash before the commit link"):
+                op()
+        finally:
+            del t._commit
+        assert t.latest_version() == version, name
+        assert rows() == before, name
+        orphan = set(os.listdir(t._data)) - roots
+        assert len(orphan) == (0 if name == "restore" else 1), name
+        op()
+        assert t.latest_version() == version + 1, name
+        assert rows() == expected, name
+        assert not orphan & listed_roots(), name
+        assert orphan <= set(t.vacuum(retain_last=1, dry_run=True)), name
+        orphans |= orphan
+    assert t.read().columns == ["id", "value", "p"]
+    assert orphans <= set(t.vacuum(retain_last=1))
+    assert not orphans & set(os.listdir(t._data))
+    assert rows() == s_compacted
+
+
 def test_changes_tags_net_diff(spark, tmp_table_path):
     """changes(): insert/update_postimage/delete tagging with null-safe
     payload comparison; unchanged rows don't appear; deletes carry the
