@@ -121,7 +121,7 @@ def refresh_aggregate(
     idempotent-writer pattern.
     """
     if txn is not None:
-        last = table.last_txn_version(txn[0]) if table.exists() else None
+        last = table.last_txn_version(txn[0])
         if last is not None and txn[1] <= last:
             return {"groups_in_delta": 0, "skipped_replay": True}
     n = delta.count()

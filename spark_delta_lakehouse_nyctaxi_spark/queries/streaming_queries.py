@@ -549,7 +549,7 @@ def q_stream_incremental_agg(spark, sf_dir):
     def fold(batch_df, batch_id):
         if batch_df.isEmpty():
             return
-        last = t.last_txn_version(app_id) if t.exists() else None
+        last = t.last_txn_version(app_id)
         if last is not None and batch_id <= last:
             return  # replayed batch — already folded into the view
         partial = batch_df.groupBy("user_id").agg(
@@ -790,9 +790,7 @@ def q_stream_exactly_once(spark, sf_dir):
         # txn guard reads COMMITTED BATCH IDS from the version-log
         # metadata (driver-side manifests, the Delta txn-appId pattern)
         # — no per-batch scan of the growing partials table
-        committed = {
-            v.extra.get("eo_batch") for v in tbl._versions()
-        } if tbl.exists() else set()
+        committed = {v.extra.get("eo_batch") for v in tbl._versions()}
         if batch_id in committed:
             replays["n"] += 1  # replay detected — idempotent skip
             return
@@ -802,11 +800,7 @@ def q_stream_exactly_once(spark, sf_dir):
             .cast("double")
             .alias("sum_value"),
         ).withColumn("batch_id", F.lit(batch_id))
-        tbl.write(
-            part,
-            mode="append" if tbl.exists() else "overwrite",
-            extra={"eo_batch": batch_id},
-        )
+        tbl.write(part, mode="append", extra={"eo_batch": batch_id})
         if batch_id == 2 and not os.path.exists(crash_flag):
             # worst-case fault: data durable, checkpoint NOT committed
             with open(crash_flag, "w") as f:
@@ -1053,7 +1047,7 @@ def q_stream_packing(spark, sf_dir):
         if batch_df.isEmpty():
             return
         base = 0
-        prev = t_out.last_txn_commit(app_id) if t_out.exists() else None
+        prev = t_out.last_txn_commit(app_id)
         if prev is not None:
             if batch_id <= prev["txn"]["version"]:
                 return  # replayed batch — already committed atomically
@@ -1465,7 +1459,7 @@ def q_stream_substr_dedup(spark, sf_dir):
     def fold(batch_df, batch_id):
         if batch_df.isEmpty():
             return
-        prev = t_state.last_txn_commit(app_id) if t_state.exists() else None
+        prev = t_state.last_txn_commit(app_id)
         if prev is not None and batch_id <= prev["txn"]["version"]:
             return  # replayed batch — already committed atomically
         watermark = int(prev["doc_watermark"]) if prev is not None else lo
@@ -1734,7 +1728,7 @@ def q_stream_ivf_append(spark, sf_dir):
             return
         batch_df = batch_df.localCheckpoint(eager=True)
         n_batch = batch_df.count()
-        prev = t_out.last_txn_commit(app_id) if t_out.exists() else None
+        prev = t_out.last_txn_commit(app_id)
         if prev is not None and batch_id <= prev["txn"]["version"]:
             return  # replayed batch — already committed atomically
         if prev is None:

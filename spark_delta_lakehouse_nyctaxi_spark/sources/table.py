@@ -10,17 +10,18 @@ semantics on plain parquet with a JSON version log:
 
     <path>/_vlog/00000000.json   one manifest per version; snapshot
                                  semantics (lists ALL live data units)
-    <path>/data/v00000000-<id>/  parquet written by one commit
+    <path>/data/<uuid>/          parquet written by one commit
 
 A "data unit" is the granularity of reuse between versions:
 - unpartitioned commit  → the commit dir itself
 - partitioned commit    → each ``key=value`` subdir individually
 
-Partition-subdir granularity is what makes MERGE scale: an upsert
-touching 3 of 10,000 daily partitions rewrites 3 subdirs and carries
-the other 9,997 over by reference — the same file-skipping contract
-Delta's partition-pruned MERGE provides. Appending 1 GB to a 100 TB
-table writes 1 GB.
+Copy-on-write DML (merge, update, delete, replace_where) has Delta's
+two-phase shape: find the units that hold a matched row, rewrite only
+those, and carry every other unit over by reference. An upsert whose
+keys live in 3 of 10,000 daily partitions rewrites 3 subdirs; an update
+of one row in a table of many appends rewrites one commit dir. Appending
+1 GB to a 100 TB table writes 1 GB.
 
 The version log is tiny driver-side JSON metadata (like Delta's
 transaction log); all data movement is Spark jobs. Each manifest is
@@ -117,7 +118,7 @@ class VersionedTable:
         t.read()                     # latest snapshot
         t.read(version=0)            # time travel by version
         t.read(timestamp=ts)         # time travel by wall clock
-        t.merge(src, keys=["id"])    # upsert (partition-pruned if possible)
+        t.merge(src, keys=["id"])    # upsert (rewrites only matched units)
         t.history(); t.restore(0); t.vacuum(); t.compact()
     """
 
@@ -708,8 +709,7 @@ class VersionedTable:
     def _write_units(self, df: DataFrame, partition_by: list[str] | None) -> list[str]:
         """Write one commit dir; return its data units (partition
         subdirs when partitioned, else the commit dir)."""
-        v = self.latest_version() + 1
-        rel = f"v{v:08d}-{uuid.uuid4().hex[:8]}"
+        rel = uuid.uuid4().hex
         target = os.path.join(self._data, rel)
         writer = df.write.mode("overwrite")
         if partition_by:
@@ -1415,23 +1415,27 @@ class VersionedTable:
             df = df.filter(F.col(col) == F.lit(v))
         return self._apply_column_map(df, info)
 
-    def _matched_units(self, info: VersionInfo, condition: str) -> tuple[list[str], list[str]]:
-        """Split ``info``'s units into (touched, carried): those holding
-        a row that matches ``condition``, and the rest. Touched units
-        are derived from the actual files that hold matching rows
-        (input_file_name), not from re-encoding partition values as
-        strings — str(value) diverges from Spark's partition-path
-        encoding for NULLs (__HIVE_DEFAULT_PARTITION__), URL-escaped
-        characters, and float/timestamp formatting. File paths are
-        metadata-sized (one row per file, same cardinality as Delta's
-        file stats)."""
+    def _matched_units(self, info: VersionInfo, match) -> tuple[list[str], list[str]]:
+        """Split ``info``'s units into (touched, carried) — the finder
+        of every copy-on-write DML. ``match`` maps the snapshot, read
+        through its tombstones, to its matching rows; a unit is touched
+        when it holds one. Touched units come from the files that hold
+        the matches (input_file_name, projected before ``match`` so a
+        join may follow), never from re-encoding partition values as
+        strings, which diverges from Spark's path encoding for NULLs,
+        URL-escaped characters and float/timestamp formatting. File
+        paths are metadata-sized (one row per file, the cardinality of
+        Delta's file stats). A snapshot of at most one unit is all
+        touched, with no Spark job: there is nothing to carry."""
         from urllib.parse import unquote, urlparse
 
+        if len(info.units) <= 1:
+            return list(info.units), []
+        snap = self._read_with_deletes(info, info.units)
         matched_files = {
-            unquote(urlparse(r["_f"]).path)
-            for r in self._read_with_deletes(info, info.units)
-            .filter(condition)
-            .select(F.input_file_name().alias("_f"))
+            unquote(urlparse(r["_file"]).path)
+            for r in match(snap.withColumn("_file", F.input_file_name()))
+            .select("_file")
             .distinct()
             .collect()
         }
@@ -1445,12 +1449,10 @@ class VersionedTable:
     def delete(self, condition: str, mode: str = "copy-on-write") -> VersionInfo:
         """Delta ``DELETE WHERE`` analog.
 
-        ``mode="copy-on-write"`` (default): rewrite the snapshot without
-        the matching rows. When the table is partitioned, partitions
-        whose every row survives are carried over BY REFERENCE — only
-        partitions containing matches are rewritten (computed from one
-        aggregate over the partition columns, the moral equivalent of
-        Delta's file-level deletion stats).
+        ``mode="copy-on-write"`` (default): rewrite only the units that
+        hold a matching row (:meth:`_matched_units`), without those
+        rows; every other unit is carried over by reference with its
+        metadata. A delete that matches nothing commits nothing.
 
         ``mode="merge-on-read"``: the deletion-vector / Iceberg
         equality-delete analog — NO data is rewritten at all. The
@@ -1465,28 +1467,23 @@ class VersionedTable:
         if mode not in ("copy-on-write", "merge-on-read"):
             raise ValueError(f"unsupported delete mode {mode!r}")
         info = self._require_no_column_map("delete")
-        part_cols = info.partition_by
         if mode == "merge-on-read":
             return self._next(
                 info, "DELETE", "merge-on-read", info.units, [],
                 {"condition": condition}, tombstone=condition,
             )
+        touched, carried = self._matched_units(info, lambda t: t.filter(condition))
+        if not touched:
+            return info  # nothing matched; current snapshot stands
         # DELETE removes rows where the condition is TRUE; rows where it
         # evaluates to NULL must SURVIVE (Delta semantics) — a bare
-        # `NOT (cond)` would silently drop them.
-        keep_pred = f"NOT coalesce(({condition}), false)"
-        if part_cols:
-            touched_units, carried = self._matched_units(info, condition)
-            if not touched_units:
-                return info  # nothing matched; current snapshot stands
-            # read THROUGH pending merge-on-read tombstones — a raw unit
-            # read would resurrect previously MoR-deleted rows in the
-            # rewritten partitions
-            kept = self._read_with_deletes(info, touched_units).filter(keep_pred)
-        else:
-            carried = []
-            kept = self._read_with_deletes(info, info.units).filter(keep_pred)
-        new_units = self._write_units(kept, part_cols)
+        # `NOT (cond)` would silently drop them. The rewrite reads
+        # THROUGH pending tombstones, which would otherwise resurrect
+        # previously MoR-deleted rows.
+        kept = self._read_with_deletes(info, touched).filter(
+            f"NOT coalesce(({condition}), false)"
+        )
+        new_units = self._write_units(kept, info.partition_by)
         return self._next(info, "DELETE", None, carried, new_units, {"condition": condition})
 
     def replace_where(
@@ -1500,13 +1497,13 @@ class VersionedTable:
 
         Delta semantics throughout: every incoming row must satisfy the
         predicate (else the commit is rejected before any data lands);
-        existing rows where the predicate is NULL survive. Units with
-        no matching rows — proven by the same file-level matched-file
-        scan DELETE uses, so it works partitioned or not — are carried
-        BY REFERENCE with their skipping stats, blooms, and pending
-        merge-on-read tombstones intact; only matching units are
-        rewritten. Defaults / generated / identity columns apply to the
-        incoming frame exactly as in :meth:`write`."""
+        existing rows where the predicate is NULL survive. Only the
+        units holding a matching row are rewritten
+        (:meth:`_matched_units`, as for every copy-on-write DML); the
+        rest are carried BY REFERENCE with their skipping stats, blooms,
+        and pending merge-on-read tombstones intact. Defaults /
+        generated / identity columns apply to the incoming frame exactly
+        as in :meth:`write`."""
         info = self._require_no_column_map("replace_where")
         rules = self._rules(info)
         df, identity = self._fill(df, rules)
@@ -1526,11 +1523,12 @@ class VersionedTable:
             )
         self._check_constraints(df, rules, "REPLACE WHERE")
         part_cols = info.partition_by
-        touched, carried = self._matched_units(info, condition)
-        keep_pred = f"NOT coalesce(({condition}), false)"
+        touched, carried = self._matched_units(info, lambda t: t.filter(condition))
         new_units: list[str] = []
         if touched:
-            kept = self._read_with_deletes(info, touched).filter(keep_pred)
+            kept = self._read_with_deletes(info, touched).filter(
+                f"NOT coalesce(({condition}), false)"
+            )
             new_units += self._write_units(kept, part_cols)
         new_units += self._write_units(self._as_logged(df, schema), part_cols)
         return self._next(
@@ -1548,7 +1546,9 @@ class VersionedTable:
         column replaced by its SQL expression (over the row itself),
         everything else passes through unchanged.
 
-        ``copy-on-write`` (default): one scan, one full rewrite.
+        ``copy-on-write`` (default): rewrite only the units that hold a
+        matching row (:meth:`_matched_units`) and carry the rest by
+        reference; an update that matches nothing commits nothing.
 
         ``merge-on-read``: the deletion-vector update path — ONLY the
         matched rows are written (as a fresh unit carrying their
@@ -1570,8 +1570,8 @@ class VersionedTable:
                 f"column(s) {sorted(bad_ident)} are GENERATED ALWAYS AS "
                 "IDENTITY and cannot be updated"
             )
-        df = self._read_with_deletes(info, info.units)
         if mode == "merge-on-read":
+            df = self._read_with_deletes(info, info.units)
             matched = df.filter(F.expr(f"coalesce(({condition}), false)"))
             updated = matched.select(
                 *[
@@ -1587,6 +1587,10 @@ class VersionedTable:
                 info, "UPDATE", "merge-on-read", info.units, new_units,
                 {"condition": condition, "set": set_exprs}, tombstone=condition,
             )
+        touched, carried = self._matched_units(info, lambda t: t.filter(condition))
+        if not touched:
+            return info  # nothing matched; current snapshot stands
+        df = self._read_with_deletes(info, touched)
         cols = [
             F.when(F.expr(condition), F.expr(e)).otherwise(F.col(c)).alias(c)
             if c in set_exprs
@@ -1599,7 +1603,8 @@ class VersionedTable:
             self._as_logged(updated, self._schema(info)), info.partition_by
         )
         return self._next(
-            info, "UPDATE", None, [], new_units, {"condition": condition, "set": set_exprs}
+            info, "UPDATE", None, carried, new_units,
+            {"condition": condition, "set": set_exprs},
         )
 
     def changes(
@@ -1860,38 +1865,6 @@ class VersionedTable:
 
     # ----------------------------------------------------------- merge
 
-    def _touched_partition_units(self, source: DataFrame, part_cols: list[str]) -> set[str]:
-        """Spark-encode the source's distinct partition values by writing
-        them partitioned to a scratch dir and reading back the subdir
-        names — guarantees byte-identical key=value encoding."""
-        scratch = os.path.join(self._data, f".touch-{uuid.uuid4().hex[:8]}")
-        try:
-            (
-                source.select(*part_cols)
-                .distinct()
-                .withColumn("__x", F.lit(1))
-                .write.mode("overwrite")
-                .partitionBy(*part_cols)
-                .parquet(scratch)
-            )
-            out: set[str] = set()
-
-            def walk(prefix: str, depth: int):
-                full = os.path.join(scratch, prefix) if prefix else scratch
-                for sub in os.listdir(full):
-                    if "=" not in sub:
-                        continue
-                    rel = f"{prefix}/{sub}" if prefix else sub
-                    if depth == 1:
-                        out.add(rel)
-                    else:
-                        walk(rel, depth - 1)
-
-            walk("", len(part_cols))
-            return out
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
-
     def merge(
         self,
         source: DataFrame,
@@ -1924,11 +1897,14 @@ class VersionedTable:
         aggregate maintenance. Unmatched source rows still insert the
         source values.
 
-        Partition pruning: when the table is partitioned and the source
-        carries the partition columns, only partitions present in the
-        source are joined and rewritten; all other partition subdirs are
-        carried over by reference (no IO). New source partitions land in
-        the rewrite automatically.
+        Only the units holding a target row whose keys match a source
+        row are read and rewritten (:meth:`_matched_units`, with the
+        same null-safe key match as the join below); every other unit
+        is carried over by reference. On a partitioned table the merged
+        rows are written partitioned, so a key whose partition value
+        changed leaves its old unit and lands in its new partition, and
+        new source partitions land in the rewrite. A table with no
+        logged column yet takes the source as an append.
         """
         info = self._head()
         rules = self._rules(info)
@@ -1952,36 +1928,31 @@ class VersionedTable:
                 )
         schema = self._schema(info)
         if not schema.fields:
-            # nothing written yet
-            return self.write(source, mode="overwrite", operation="MERGE", extra=extra)
+            # nothing written yet: an append, so a concurrent first
+            # writer's rows are kept rather than overwritten
+            return self.write(source, mode="append", operation="MERGE", extra=extra)
         self._require_no_column_map("merge", info)
         cols = schema.fieldNames()
         update_columns = update_columns or [
             c for c in cols if c not in keys and c in source.columns
         ]
-
-        part_cols = info.partition_by
-        prunable = bool(part_cols) and all(c in source.columns for c in part_cols)
-        if prunable:
-            touched = self._touched_partition_units(source, part_cols)
-            touched_units = [u for u in info.units if u.split("/", 1)[1] in touched]
-            carried_units = [u for u in info.units if u.split("/", 1)[1] not in touched]
-            # read THROUGH pending merge-on-read tombstones: a raw unit
-            # read would resurrect MoR-deleted rows into the rewrite
-            target = self._read_with_deletes(info, touched_units)
-        else:
-            carried_units = []
-            target = self._read_with_deletes(info, info.units)
+        cond = functools.reduce(
+            lambda a, b: a & b,
+            [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
+        )
+        touched, carried = self._matched_units(
+            info,
+            lambda t: t.alias("t").join(source.select(*keys).alias("s"), cond, "left_semi"),
+        )
+        # read THROUGH pending merge-on-read tombstones: a raw unit read
+        # would resurrect MoR-deleted rows into the rewrite
+        target = self._read_with_deletes(info, touched)
 
         # Literal markers (not key-nullness) detect row presence after the
         # full-outer join — the join matches NULL keys via eqNullSafe, so
         # key-based flags would mislabel genuinely NULL-keyed rows.
         t = target.withColumn("_t_mark", F.lit(True)).alias("t")
         s = source.withColumn("_s_mark", F.lit(True)).alias("s")
-        cond = None
-        for k in keys:
-            c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))
-            cond = c if cond is None else (cond & c)
         joined = t.join(s, cond, "full_outer")
 
         s_present = F.col("s._s_mark").isNotNull()
@@ -2033,11 +2004,11 @@ class VersionedTable:
                 )
 
         self._check_constraints(merged, rules, "MERGE")
-        new_units = self._write_units(self._as_logged(merged, schema), part_cols)
+        new_units = self._write_units(self._as_logged(merged, schema), info.partition_by)
         return self._next(
-            info, "MERGE", None, carried_units, new_units,
+            info, "MERGE", None, carried, new_units,
             {
-                **(extra or {}), "keys": keys, "pruned": prunable,
+                **(extra or {}), "keys": keys, "pruned": bool(carried),
                 **({"identity": identity} if identity else {}),
             },
         )
@@ -2051,12 +2022,8 @@ class VersionedTable:
         checkpoint restart) record ``extra={"txn": {"app_id": ...,
         "version": batch_id}}`` on each commit and skip any batch whose
         id is ≤ this value."""
-        best = None
-        for v in self._versions():
-            txn = v.extra.get("txn")
-            if txn and txn.get("app_id") == app_id:
-                best = txn["version"] if best is None else max(best, txn["version"])
-        return best
+        commit = self.last_txn_commit(app_id)
+        return None if commit is None else commit["txn"]["version"]
 
     def last_txn_commit(self, app_id: str) -> dict | None:
         """Full ``extra`` metadata of the HIGHEST-version transactional

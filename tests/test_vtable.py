@@ -1732,3 +1732,210 @@ def test_manifest_without_schema_raises(spark, tmp_path):
         t.write(spark.createDataFrame([(2, "b")], "id long, v string"), mode="append")
     t.write(spark.createDataFrame([(3, "c")], "id long, v string"), mode="overwrite")
     assert [tuple(r) for r in t.read().collect()] == [(3, "c")]
+
+
+def test_merge_key_changing_partition_moves_the_row(spark, tmp_path):
+    """A merge finds the units holding the target rows of the source's
+    keys, not the partitions the source names: a key whose partition
+    value changed is read from its old unit and written to its new
+    partition once, with one unit or many in the snapshot."""
+    t = VersionedTable(spark, str(tmp_path / "moved"))
+    t.write(
+        spark.createDataFrame([(1, 10.0, 1), (2, 20.0, 1)], "id long, v double, p long"),
+        mode="overwrite", partition_by=["p"],
+    )
+    t.merge(spark.createDataFrame([(1, 11.0, 2)], "id long, v double, p long"), keys=["id"])
+    assert sorted(tuple(r) for r in t.read().select("id", "v", "p").collect()) == [
+        (1, 11.0, 2), (2, 20.0, 1)
+    ]
+    # two units now; the moved key's old unit is the only one rewritten
+    t.merge(spark.createDataFrame([(2, 21.0, 2)], "id long, v double, p long"), keys=["id"])
+    assert sorted(tuple(r) for r in t.read().select("id", "v", "p").collect()) == [
+        (1, 11.0, 2), (2, 21.0, 2)
+    ]
+
+
+def test_unpartitioned_dml_rewrites_only_touched_units(spark, tmp_path):
+    """On an unpartitioned table each append is one unit. A delete, a
+    copy-on-write update and a merge that match rows of one unit
+    rewrite that unit alone and carry the other two by path."""
+    t = VersionedTable(spark, str(tmp_path / "carry"))
+    for i, base in enumerate((1, 11, 21)):
+        t.write(
+            spark.createDataFrame(
+                [(base + j, float(base + j)) for j in range(3)], "id long, v double"
+            ),
+            mode="append" if i else "overwrite",
+        )
+    rows = {(i, float(i)) for i in (1, 2, 3, 11, 12, 13, 21, 22, 23)}
+
+    def step(op, touched_id, expected):
+        before = t._resolve()
+        op()
+        after = t._resolve()
+        holder = [
+            u for u in before.units
+            if t._read_units(before, [u]).filter(f"id = {touched_id}").count()
+        ]
+        assert len(holder) == 1
+        assert set(before.units) - set(holder) <= set(after.units)
+        assert len(after.units) == 3
+        assert {tuple(r) for r in t.read().collect()} == expected
+
+    rows -= {(3, 3.0)}
+    step(lambda: t.delete("id = 3"), 3, rows)
+    rows = rows - {(13, 13.0)} | {(13, 130.0)}
+    step(lambda: t.update({"v": "v * 10"}, "id = 13"), 13, rows)
+    rows = rows - {(22, 22.0)} | {(22, -1.0), (30, 30.0)}
+    step(
+        lambda: t.merge(
+            spark.createDataFrame([(22, -1.0), (30, 30.0)], "id long, v double"), keys=["id"]
+        ),
+        22, rows,
+    )
+    assert t._resolve().extra["pruned"] is True
+    # an update or delete that matches nothing commits nothing
+    v = t.latest_version()
+    t.update({"v": "0.0"}, "id = 999")
+    t.delete("id = 999")
+    assert t.latest_version() == v
+
+
+def test_partitioned_merge_makes_one_parquet_write(spark, tmp_path, monkeypatch):
+    """A partitioned merge writes parquet once, for the units it
+    rewrites; finding its touched units writes nothing."""
+    from pyspark.sql import DataFrameWriter
+
+    t = VersionedTable(spark, str(tmp_path / "onewrite"))
+    t.write(
+        _mk(spark, [{"id": i, "day": f"d{i % 3}", "v": float(i)} for i in range(9)]),
+        mode="overwrite", partition_by=["day"],
+    )
+    calls = []
+    real_parquet = DataFrameWriter.parquet
+
+    def counting_parquet(self, path, *a, **kw):
+        calls.append(path)
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting_parquet)
+    t.merge(_mk(spark, [{"id": 1, "day": "d1", "v": -1.0}]), keys=["id"])
+    assert len(calls) == 1
+    assert {r.id: r.v for r in t.read().collect()}[1] == -1.0
+
+
+def test_merge_into_missing_table_keeps_concurrent_first_writer(spark, tmp_path):
+    """A merge into a table that logs no column yet is an append: a
+    concurrent first writer that commits between its read and its
+    commit keeps its rows."""
+    path = str(tmp_path / "first")
+    t = VersionedTable(spark, path)
+    orig_write_units = t._write_units
+
+    def other_first(df, partition_by):
+        VersionedTable(spark, path).merge(_mk(spark, [{"id": 10}]), keys=["id"])
+        return orig_write_units(df, partition_by)
+
+    t._write_units = other_first
+    t.merge(_mk(spark, [{"id": 20}]), keys=["id"])
+    assert sorted(r.id for r in t.read().collect()) == [10, 20]
+    assert [h["operation"] for h in t.history()] == ["MERGE", "MERGE"]
+
+
+def test_append_lists_the_log_once(spark, tmp_path):
+    """An append resolves the head once; naming its commit dir needs
+    no second listing of the log."""
+    t = VersionedTable(spark, str(tmp_path / "listing"))
+    t.write(_mk(spark, [{"id": 1}]), mode="overwrite")
+    listings = []
+    real_versions = t._versions
+
+    def counting_versions():
+        listings.append(1)
+        return real_versions()
+
+    t._versions = counting_versions
+    t.write(_mk(spark, [{"id": 2}]), mode="append")
+    assert len(listings) == 1
+    del t._versions
+    assert sorted(r.id for r in t.read().collect()) == [1, 2]
+
+
+def test_crash_in_post_commit_checkpoint_keeps_the_commit(spark, tmp_path):
+    """A crash after the commit link, in the post-commit checkpoint,
+    leaves the commit durable and visible; the next checkpoint catches
+    up over every version."""
+    t = VersionedTable(spark, str(tmp_path / "postckpt"))
+    t.write(_mk(spark, [{"id": 0}]), mode="overwrite")
+    for i in range(1, 10):
+        t.write(_mk(spark, [{"id": i}]), mode="append")
+
+    def crash():
+        raise OSError("crash in the post-commit checkpoint")
+
+    t.checkpoint = crash
+    t.write(_mk(spark, [{"id": 10}]), mode="append")  # commits version 10
+    del t.checkpoint
+    assert t.latest_version() == 10
+    assert sorted(r.id for r in t.read().collect()) == list(range(11))
+    assert t._read_checkpoint() == (-1, [])
+    assert t.checkpoint() == 10
+    ck_v, infos = t._read_checkpoint()
+    assert ck_v == 10 and [v.version for v in infos] == list(range(11))
+    assert sorted(r.id for r in t.read(version=4).collect()) == list(range(5))
+
+
+def test_crash_in_checkpoint_pointer_update_falls_back_to_json_log(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint whose ``_last_checkpoint`` pointer update fails
+    (the rename raises, or the pointer file is torn) leaves every
+    version readable from the JSON log, and ``cleanup_log`` deletes
+    only manifests the last good checkpoint covers."""
+    from spark_delta_lakehouse_nyctaxi_spark.sources import table as table_mod
+
+    def versions(t):
+        return [v.version for v in t._versions()]
+
+    # the rename of the new pointer raises: the old pointer stands
+    t = VersionedTable(spark, str(tmp_path / "replace"))
+    t.write(_mk(spark, [{"id": 0}]), mode="overwrite")
+    for i in range(1, 5):
+        t.write(_mk(spark, [{"id": i}]), mode="append")
+    assert t.checkpoint() == 4
+    for i in range(5, 8):
+        t.write(_mk(spark, [{"id": i}]), mode="append")
+
+    def crash(src, dst):
+        raise OSError("crash in the pointer rename")
+
+    monkeypatch.setattr(table_mod.os, "replace", crash)
+    with pytest.raises(OSError, match="pointer rename"):
+        t.checkpoint()
+    monkeypatch.undo()
+    assert t._read_checkpoint()[0] == 4
+    assert versions(t) == list(range(8))
+    assert t.cleanup_log() == 5
+    assert sorted(f for f in os.listdir(t._vlog) if t._is_version_file(f)) == [
+        f"{v:08d}.json" for v in range(5, 8)
+    ]
+    assert versions(t) == list(range(8))
+    assert sorted(r.id for r in t.read(version=2).collect()) == [0, 1, 2]
+    assert sorted(r.id for r in t.read().collect()) == list(range(8))
+    assert t.checkpoint() == 7 and t._read_checkpoint()[0] == 7
+
+    # a torn pointer file: the JSON log is authoritative, cleanup deletes
+    # nothing, and the next checkpoint rewrites the pointer
+    t = VersionedTable(spark, str(tmp_path / "torn"))
+    t.write(_mk(spark, [{"id": 0}]), mode="overwrite")
+    for i in range(1, 4):
+        t.write(_mk(spark, [{"id": i}]), mode="append")
+    assert t.checkpoint() == 3
+    with open(t._last_checkpoint_path, "w") as f:
+        f.write('{"version": 3, "fi')
+    assert t._read_checkpoint() == (-1, [])
+    assert versions(t) == list(range(4))
+    assert t.cleanup_log() == 0
+    assert len([f for f in os.listdir(t._vlog) if t._is_version_file(f)]) == 4
+    assert sorted(r.id for r in t.read(version=1).collect()) == [0, 1]
+    assert t.checkpoint() == 3 and t._read_checkpoint()[0] == 3
