@@ -1101,16 +1101,16 @@ def q_dpp_certified(spark, sf_dir):
     """,
     doc="Version-log CHECKPOINTING (metadata scale): 13 commits land on "
         "a VersionedTable, the 10th auto-writes a parquet checkpoint of "
-        "the full manifest history + a _last_checkpoint pointer (Delta's "
-        "_delta_log checkpoint layout), and cleanup_log() deletes the "
-        "covered JSON manifests. At 100k commits snapshot resolution "
+        "the full manifest history (Delta's _delta_log "
+        "NNN.checkpoint.parquet, found by listing the log), and "
+        "cleanup_log() deletes the covered JSON manifests. At 100k commits snapshot resolution "
         "through the log would otherwise reopen 100k driver-side JSON "
         "files; through the checkpoint it is one parquet read + the "
         "tail. The query then TIME TRAVELS to version 7 — a version "
         "whose JSON manifest no longer exists — proving the checkpoint "
         "retains every time-travel target (stronger than Delta, whose "
         "checkpoints hold only the live snapshot). RAISES in-query if "
-        "the checkpoint/pointer/cleanup invariants do not hold, so the "
+        "the checkpoint/cleanup invariants do not hold, so the "
         "value check doubles as a storage-layout certificate.",
 )
 def q_log_checkpoint(spark, sf_dir):

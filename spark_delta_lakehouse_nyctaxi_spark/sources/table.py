@@ -10,6 +10,8 @@ semantics on plain parquet with a JSON version log:
 
     <path>/_vlog/00000000.json   one manifest per version; snapshot
                                  semantics (lists ALL live data units)
+    <path>/_vlog/00000010.checkpoint.parquet
+                                 manifests 0..10 in one file (every 10th)
     <path>/data/<uuid>/          parquet written by one commit
 
 A "data unit" is the granularity of reuse between versions:
@@ -137,64 +139,71 @@ class VersionedTable:
 
     @staticmethod
     def _is_version_file(fn: str) -> bool:
-        # strictly NNNNNNNN.json — checkpoints, the _last_checkpoint
-        # pointer and temp files live in the same dir and must not
-        # parse as a version manifest
+        # strictly NNNNNNNN.json — checkpoints and temp files live in the
+        # same dir and must not parse as a version manifest
         stem = fn[:-5]
         return fn.endswith(".json") and stem.isdigit()
 
+    def _log_files(self) -> tuple[list[int], list[int]]:
+        """One listing of the log: its version numbers and its checkpoint
+        numbers, each ascending. Any other file is ignored: temp files,
+        and a ``_last_checkpoint`` pointer left by older code."""
+        try:
+            names = os.listdir(self._vlog)
+        except FileNotFoundError:
+            return [], []
+        versions, checkpoints = [], []
+        for fn in names:
+            stem, _, ext = fn.partition(".")
+            if stem.isdigit() and ext in ("json", "checkpoint.parquet"):
+                (versions if ext == "json" else checkpoints).append(int(stem))
+        return sorted(versions), sorted(checkpoints)
+
     def exists(self) -> bool:
-        if not os.path.isdir(self._vlog):
-            return False
-        return os.path.exists(self._last_checkpoint_path) or bool(
-            [f for f in os.listdir(self._vlog) if self._is_version_file(f)]
-        )
+        return any(self._log_files())
 
     # -------------------------------------------------- log checkpoints
     #
     # Delta-style metadata scaling: snapshot resolution must not reopen
     # every JSON manifest ever committed (at 100k commits that is 100k
-    # driver-side file opens per read). A checkpoint is ONE parquet file
-    # under _vlog holding every VersionInfo up to its version, plus a
-    # `_last_checkpoint` pointer (same layout role as Delta's
-    # `_delta_log/NNN.checkpoint.parquet` + `_last_checkpoint`).
-    # `_versions()` then reads the checkpoint + only the JSON manifests
-    # AFTER it. Because our manifests are tiny, the checkpoint retains
-    # the FULL history, so `cleanup_log()` may delete superseded JSONs
+    # driver-side file opens per read). A checkpoint is ONE parquet file,
+    # `_vlog/NNNNNNNN.checkpoint.parquet`, holding every VersionInfo up
+    # to its version. `_versions()` takes the newest checkpoint its one
+    # listing finds that reads, and opens only the JSON manifests AFTER
+    # it. Because our manifests are tiny, the checkpoint retains the
+    # FULL history, so `cleanup_log()` may delete superseded JSONs
     # without losing any time-travel target (stronger than Delta, whose
     # checkpoints hold only the live snapshot state).
 
-    @property
-    def _last_checkpoint_path(self) -> str:
-        return os.path.join(self._vlog, "_last_checkpoint")
+    def _read_checkpoint(self, checkpoints=None) -> tuple[int, list[VersionInfo]]:
+        """Return (checkpoint version, manifests ≤ that version) from the
+        newest checkpoint that reads, trying older ones past an unreadable
+        file; (-1, []) when none reads. ``checkpoints`` is the list from
+        :meth:`_log_files`, listed here when omitted."""
+        import pyarrow.parquet as pq
 
-    def _read_checkpoint(self) -> tuple[int, list[VersionInfo]]:
-        """Return (checkpoint version, manifests ≤ that version); (-1, [])
-        when no checkpoint exists. Robust to a torn/missing file (falls
-        back to the JSON log, which is still authoritative)."""
-        try:
-            with open(self._last_checkpoint_path) as f:
-                meta = json.loads(f.read())
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(os.path.join(self._vlog, meta["file"]))
-            infos = [VersionInfo.from_json(s) for s in tbl.column("manifest").to_pylist()]
-            return int(meta["version"]), infos
-        except (FileNotFoundError, KeyError, ValueError, OSError):
-            return -1, []
+        if checkpoints is None:
+            checkpoints = self._log_files()[1]
+        for n in reversed(checkpoints):
+            try:
+                tbl = pq.read_table(os.path.join(self._vlog, f"{n:08d}.checkpoint.parquet"))
+                manifests = tbl.column("manifest").to_pylist()
+                return n, [VersionInfo.from_json(m) for m in manifests]
+            except (KeyError, ValueError, OSError):
+                continue  # unreadable: fall back to the next older one
+        return -1, []
 
     def checkpoint(self) -> int:
-        """Write a parquet checkpoint of the full version log and advance
-        `_last_checkpoint`. Idempotent and concurrency-safe: content is a
-        pure function of the immutable committed manifests, the file is
-        put-if-absent (racing writers produce identical bytes), and the
-        pointer only moves forward."""
+        """Write a parquet checkpoint of the full version log. Idempotent
+        and concurrency-safe: content is a pure function of the immutable
+        committed manifests, and the file is put-if-absent (racing
+        writers produce identical bytes). The newest checkpoint is the
+        highest-numbered file, so it only moves forward."""
         vs = self._versions()
         if not vs:
             return -1
         n = vs[-1].version
-        fn = f"{n:08d}.checkpoint.parquet"
-        fp = os.path.join(self._vlog, fn)
+        fp = os.path.join(self._vlog, f"{n:08d}.checkpoint.parquet")
         if not os.path.exists(fp):
             import pyarrow as pa
             import pyarrow.parquet as pq
@@ -213,43 +222,28 @@ class VersionedTable:
                 pass  # a racing writer won with identical content
             finally:
                 os.unlink(tmp)
-        cur, _ = self._read_checkpoint()
-        if n > cur:
-            tmp = os.path.join(self._vlog, f".{uuid.uuid4().hex}.lcp.tmp")
-            with open(tmp, "w") as f:
-                f.write(json.dumps({"version": n, "file": fn}))
-            os.replace(tmp, self._last_checkpoint_path)  # atomic advance
         return n
 
     def cleanup_log(self) -> int:
-        """Delete JSON manifests already covered by the last checkpoint
-        (it retains full history, so every time-travel target survives).
-        Returns the number of files removed."""
-        ck_v, _ = self._read_checkpoint()
-        removed = 0
-        if ck_v < 0 or not os.path.isdir(self._vlog):
-            return removed
-        for fn in os.listdir(self._vlog):
-            if self._is_version_file(fn) and int(fn[:-5]) <= ck_v:
-                os.unlink(os.path.join(self._vlog, fn))
-                removed += 1
-        return removed
+        """Delete JSON manifests already covered by the newest checkpoint
+        that reads (it retains full history, so every time-travel target
+        survives). Returns the number of files removed."""
+        versions, checkpoints = self._log_files()
+        ck_v, _ = self._read_checkpoint(checkpoints)
+        covered = [n for n in versions if n <= ck_v]
+        for n in covered:
+            os.unlink(os.path.join(self._vlog, f"{n:08d}.json"))
+        return len(covered)
 
     def _versions(self) -> list[VersionInfo]:
-        if not self.exists():
-            return []
-        ck_v, out_map = -1, {}
-        if os.path.exists(self._last_checkpoint_path):
-            ck_v, ck_infos = self._read_checkpoint()
-            out_map = {v.version: v for v in ck_infos}
-        for fn in sorted(os.listdir(self._vlog)):
-            if self._is_version_file(fn):
-                v = int(fn[:-5])
-                if v <= ck_v and v in out_map:
-                    continue  # covered by the checkpoint — skip the open
-                with open(os.path.join(self._vlog, fn)) as f:
-                    out_map[v] = VersionInfo.from_json(f.read())
-        return [out_map[k] for k in sorted(out_map)]
+        versions, checkpoints = self._log_files()
+        _, infos = self._read_checkpoint(checkpoints)
+        out = {v.version: v for v in infos}
+        for n in versions:
+            if n not in out:  # covered manifests are not reopened
+                with open(os.path.join(self._vlog, f"{n:08d}.json")) as f:
+                    out[n] = VersionInfo.from_json(f.read())
+        return [out[k] for k in sorted(out)]
 
     def latest_version(self) -> int:
         vs = self._versions()

@@ -1513,15 +1513,17 @@ def test_replace_where(spark, tmp_table_path):
 
 
 def test_log_checkpoint_auto_and_time_travel(spark, tmp_path):
-    """Every checkpoint_interval commits a parquet checkpoint is written
-    and `_last_checkpoint` advances; snapshots and time travel resolve
-    identically through it."""
+    """Every checkpoint_interval commits a parquet checkpoint is written;
+    snapshots and time travel resolve identically through it. The log
+    holds only version manifests and checkpoints: no pointer file."""
     t = VersionedTable(spark, str(tmp_path / "ckpt"))
     df = lambda i: spark.createDataFrame([Row(id=i, v=float(i))])
     t.write(df(0), mode="overwrite")
     for i in range(1, 13):
         t.write(df(i), mode="append")
-    assert os.path.exists(os.path.join(t._vlog, "_last_checkpoint"))
+    assert [f for f in os.listdir(t._vlog) if not t._is_version_file(f)] == [
+        "00000010.checkpoint.parquet"
+    ]
     ck_v, infos = t._read_checkpoint()
     assert ck_v == 10 and len(infos) == 11
     assert os.path.exists(os.path.join(t._vlog, "00000010.checkpoint.parquet"))
@@ -1885,57 +1887,112 @@ def test_crash_in_post_commit_checkpoint_keeps_the_commit(spark, tmp_path):
     assert sorted(r.id for r in t.read(version=4).collect()) == list(range(5))
 
 
-def test_crash_in_checkpoint_pointer_update_falls_back_to_json_log(
-    spark, tmp_path, monkeypatch
-):
-    """A checkpoint whose ``_last_checkpoint`` pointer update fails
-    (the rename raises, or the pointer file is torn) leaves every
-    version readable from the JSON log, and ``cleanup_log`` deletes
-    only manifests the last good checkpoint covers."""
-    from spark_delta_lakehouse_nyctaxi_spark.sources import table as table_mod
+def test_torn_checkpoint_pointer_left_by_older_code_is_ignored(spark, tmp_path):
+    """Checkpoints are found by listing the log. A ``_last_checkpoint``
+    pointer file, as older code kept beside the log, is ignored even when
+    torn: after ``cleanup_log()`` every cleaned version still resolves
+    from the checkpoint on disk."""
+    t = VersionedTable(spark, str(tmp_path / "torn"))
+    t.write(_mk(spark, [{"id": 0}]), mode="overwrite")
+    for i in range(1, 12):
+        t.write(_mk(spark, [{"id": i}]), mode="append")
+    assert t.cleanup_log() == 11
+    with open(os.path.join(t._vlog, "_last_checkpoint"), "w") as f:
+        f.write('{"version": 10, "fi')
+    assert [v.version for v in t._versions()] == list(range(12))
+    assert sorted(r.id for r in t.read(version=3).collect()) == [0, 1, 2, 3]
+    assert t.cleanup_log() == 0
+    t.write(_mk(spark, [{"id": 12}]), mode="append")
+    assert t.checkpoint() == 12 and t._read_checkpoint()[0] == 12
+    assert sorted(r.id for r in t.read().collect()) == list(range(13))
 
-    def versions(t):
-        return [v.version for v in t._versions()]
 
-    # the rename of the new pointer raises: the old pointer stands
-    t = VersionedTable(spark, str(tmp_path / "replace"))
+def test_unreadable_newest_checkpoint_falls_back_to_older_one(spark, tmp_path):
+    """A newest checkpoint that does not read is passed over for the next
+    older one: every version still resolves, and ``cleanup_log`` deletes
+    only the manifests the readable checkpoint covers."""
+    t = VersionedTable(spark, str(tmp_path / "garbage"))
     t.write(_mk(spark, [{"id": 0}]), mode="overwrite")
     for i in range(1, 5):
         t.write(_mk(spark, [{"id": i}]), mode="append")
     assert t.checkpoint() == 4
     for i in range(5, 8):
         t.write(_mk(spark, [{"id": i}]), mode="append")
-
-    def crash(src, dst):
-        raise OSError("crash in the pointer rename")
-
-    monkeypatch.setattr(table_mod.os, "replace", crash)
-    with pytest.raises(OSError, match="pointer rename"):
-        t.checkpoint()
-    monkeypatch.undo()
+    with open(os.path.join(t._vlog, "00000006.checkpoint.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    assert [v.version for v in t._versions()] == list(range(8))
     assert t._read_checkpoint()[0] == 4
-    assert versions(t) == list(range(8))
     assert t.cleanup_log() == 5
     assert sorted(f for f in os.listdir(t._vlog) if t._is_version_file(f)) == [
         f"{v:08d}.json" for v in range(5, 8)
     ]
-    assert versions(t) == list(range(8))
+    assert [v.version for v in t._versions()] == list(range(8))
     assert sorted(r.id for r in t.read(version=2).collect()) == [0, 1, 2]
     assert sorted(r.id for r in t.read().collect()) == list(range(8))
-    assert t.checkpoint() == 7 and t._read_checkpoint()[0] == 7
 
-    # a torn pointer file: the JSON log is authoritative, cleanup deletes
-    # nothing, and the next checkpoint rewrites the pointer
-    t = VersionedTable(spark, str(tmp_path / "torn"))
+
+def test_crash_in_cleanup_log_keeps_every_version(spark, tmp_path, monkeypatch):
+    """A crash part-way through ``cleanup_log`` leaves every version
+    resolvable with its rows (each deleted manifest is covered by the
+    checkpoint), and a second ``cleanup_log`` removes the rest."""
+    from spark_delta_lakehouse_nyctaxi_spark.sources import table as table_mod
+
+    t = VersionedTable(spark, str(tmp_path / "cleanup"))
     t.write(_mk(spark, [{"id": 0}]), mode="overwrite")
-    for i in range(1, 4):
-        t.write(_mk(spark, [{"id": i}]), mode="append")
-    assert t.checkpoint() == 3
-    with open(t._last_checkpoint_path, "w") as f:
-        f.write('{"version": 3, "fi')
-    assert t._read_checkpoint() == (-1, [])
-    assert versions(t) == list(range(4))
-    assert t.cleanup_log() == 0
-    assert len([f for f in os.listdir(t._vlog) if t._is_version_file(f)]) == 4
-    assert sorted(r.id for r in t.read(version=1).collect()) == [0, 1]
-    assert t.checkpoint() == 3 and t._read_checkpoint()[0] == 3
+    for i in range(1, 12):
+        t.write(_mk(spark, [{"id": i}]), mode="append")  # checkpoint at 10
+    real_unlink, deleted = table_mod.os.unlink, []
+
+    def unlink(path, *a, **k):
+        if len(deleted) == 3:
+            raise OSError("crash in cleanup_log")
+        real_unlink(path, *a, **k)
+        deleted.append(path)
+
+    monkeypatch.setattr(table_mod.os, "unlink", unlink)
+    with pytest.raises(OSError, match="crash in cleanup_log"):
+        t.cleanup_log()
+    monkeypatch.undo()
+    assert len(deleted) == 3
+    assert [v.version for v in t._versions()] == list(range(12))
+    for v in range(12):
+        assert sorted(r.id for r in t.read(version=v).collect()) == list(range(v + 1))
+    assert t.cleanup_log() == 8
+    assert [f for f in os.listdir(t._vlog) if t._is_version_file(f)] == ["00000011.json"]
+    assert [v.version for v in t._versions()] == list(range(12))
+
+
+def test_crash_in_vacuum_keeps_retained_versions(spark, tmp_path, monkeypatch):
+    """A crash after ``vacuum`` removed its first commit dir leaves every
+    retained version readable, and a second ``vacuum`` removes the
+    remaining unreferenced dirs."""
+    from spark_delta_lakehouse_nyctaxi_spark.sources import table as table_mod
+
+    t = VersionedTable(spark, str(tmp_path / "vacuum"))
+    t.write(_mk(spark, [{"id": 0}]), mode="overwrite")
+    t.write(_mk(spark, [{"id": 1}]), mode="append")
+    t.write(_mk(spark, [{"id": 2}]), mode="append")
+    t.write(_mk(spark, [{"id": 10}]), mode="overwrite")
+    t.write(_mk(spark, [{"id": 11}]), mode="append")
+    stale = t.vacuum(retain_last=1, dry_run=True)
+    assert len(stale) == 3
+    real_rmtree, removed = table_mod.shutil.rmtree, []
+
+    def rmtree(path, *a, **k):
+        if removed:
+            raise OSError("crash in vacuum")
+        real_rmtree(path, *a, **k)
+        removed.append(path)
+
+    monkeypatch.setattr(table_mod.shutil, "rmtree", rmtree)
+    with pytest.raises(OSError, match="crash in vacuum"):
+        t.vacuum(retain_last=1)
+    monkeypatch.undo()
+    assert len(removed) == 1
+    assert t.latest_version() == 4
+    assert sorted(r.id for r in t.read().collect()) == [10, 11]
+    assert t.vacuum(retain_last=1) == stale[1:]
+    assert sorted(os.listdir(t._data)) == sorted(
+        {u.split("/", 1)[0] for u in t._versions()[-1].units}
+    )
+    assert sorted(r.id for r in t.read().collect()) == [10, 11]

@@ -7,29 +7,10 @@ cold, q_longest_dup_run 16 warm vs 67 cold)."""
 from __future__ import annotations
 import json, sys
 sys.path.insert(0, "/root/repo")
+from explain_plans import reset_caches  # tools/ is this script's dir
 from spark_delta_lakehouse_nyctaxi_spark import plans as P
 from spark_delta_lakehouse_nyctaxi_spark.queries import REGISTRY
 from spark_delta_lakehouse_nyctaxi_spark.session import get_spark
-
-
-def reset_caches(spark):
-    spark.catalog.clearCache()
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in list(jmap.keySet().toArray()):
-            jmap.get(rid).unpersist()
-    except Exception as e:
-        print("unpersist-all failed:", e, file=sys.stderr)
-    import spark_delta_lakehouse_nyctaxi_spark.queries.dedup as d
-    import spark_delta_lakehouse_nyctaxi_spark.queries.similarity as s
-    import spark_delta_lakehouse_nyctaxi_spark.queries.multimodal as m
-    import spark_delta_lakehouse_nyctaxi_spark.queries.suffix as x
-    d._LSH_TRUTH_MEMO.clear(); s._RECALL_MEMO.clear(); m._PALETTE_MEMO.clear()
-    # the SA/dyadic memos hold localCheckpointed frames the
-    # unpersist-all just destroyed — serving them would error (see
-    # tools/explain_plans.py)
-    x._SA_MEMO.clear()
-    d._DYADIC_MEMO.clear()
 
 
 def main():
