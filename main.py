@@ -7,9 +7,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from spark_delta_lakehouse_nyctaxi_spark.pipeline import (
     default_config,
@@ -28,7 +30,7 @@ def main() -> int:
     ap.add_argument("--config", help="YAML config path (default: built-in)")
     ap.add_argument("--env", help="environment overlay name (main.py --env parity)")
     ap.add_argument("--use-dag", action="store_true", help="run via the DAG orchestrator")
-    ap.add_argument("--base-path", default="/root/repo/.scratch/lake")
+    ap.add_argument("--base-path", default=os.path.join(ROOT, ".scratch", "lake"))
     ap.add_argument("--source", default="/root/testdata/sf0.001/orders.parquet")
     ap.add_argument("--query", help="run one registry query by name instead of a job")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01", help="table dir for --query")

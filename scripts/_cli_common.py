@@ -12,9 +12,11 @@ fixed 4-table lakehouse).
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from spark_delta_lakehouse_nyctaxi_spark.pipeline import default_config, load_config
 from spark_delta_lakehouse_nyctaxi_spark.session import get_spark, stop_spark
@@ -33,7 +35,7 @@ def add_common_args(ap: argparse.ArgumentParser, with_all: bool = True) -> None:
     ap.add_argument("--config", help="YAML config path (default: built-in)")
     ap.add_argument(
         "--base-path",
-        default="/root/repo/.scratch/lake",
+        default=os.path.join(ROOT, ".scratch", "lake"),
         help="lake root for the built-in config",
     )
     choices = TABLE_CHOICES if with_all else TABLE_CHOICES[:-1]

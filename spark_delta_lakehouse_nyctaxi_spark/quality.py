@@ -83,6 +83,10 @@ class DataQualityFramework:
     def __init__(self) -> None:
         self.predicate_checks: list[PredicateCheck] = []
         self.frame_checks: list[FrameCheck] = []
+        # (col, max_null_fraction, severity, check_nan) per null check
+        self._null_checks: list[tuple[str, float, str, bool]] = []
+        # (min_rows, severity) once a row-count check is added
+        self._min_rows: tuple[int, str] | None = None
         # row count of the frame the last evaluation saw: a by-product of
         # the check aggregate, so callers need no count() job of their own
         self.rows_checked: int | None = None
@@ -121,7 +125,6 @@ class DataQualityFramework:
     ) -> None:
         """Null (and optionally NaN, floats only — dtype-guarded unlike
         the reference) fraction must not exceed the threshold."""
-        self._null_checks = getattr(self, "_null_checks", [])
         self._null_checks.append((col, max_null_fraction, severity, check_nan))
 
     def add_row_count_check(self, min_rows: int, severity: str = SEVERITY_ERROR) -> None:
@@ -138,7 +141,7 @@ class DataQualityFramework:
             aggs.append(
                 F.sum(F.when(c.violation, 1).otherwise(0)).cast("long").alias(f"pc_{c.name}")
             )
-        for col, _, _, check_nan in getattr(self, "_null_checks", []):
+        for col, _, _, check_nan in self._null_checks:
             cond = F.col(col).isNull()
             if check_nan and _is_float_type(df, col):
                 cond = cond | F.isnan(F.col(col))
@@ -176,7 +179,6 @@ class DataQualityFramework:
         return self._results_from_row(row) + self._run_frame_checks(df)
 
     def _results_from_row(self, row: dict) -> list[CheckResult]:
-        null_checks = getattr(self, "_null_checks", [])
         total = self.rows_checked = row["__total"]
 
         results: list[CheckResult] = []
@@ -185,7 +187,7 @@ class DataQualityFramework:
             results.append(
                 CheckResult(c.name, c.description, v, v == 0, c.severity)
             )
-        for col, max_frac, severity, _ in null_checks:
+        for col, max_frac, severity, _ in self._null_checks:
             v = int(row[f"nc_{col}"] or 0)
             frac = (v / total) if total else 0.0
             results.append(
@@ -197,7 +199,7 @@ class DataQualityFramework:
                     severity,
                 )
             )
-        if hasattr(self, "_min_rows"):
+        if self._min_rows is not None:
             min_rows, severity = self._min_rows
             results.append(
                 CheckResult(

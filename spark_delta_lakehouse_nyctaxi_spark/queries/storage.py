@@ -737,10 +737,10 @@ def q_table_clone(spark, sf_dir):
     doc="Generated column (Delta GENERATED ALWAYS AS analog) round "
         "trip: register price_band = floor(o_totalprice/50000), write "
         "half the rows WITHOUT the column (it is computed), append the "
-        "other half WITH it precomputed (it is validated in the same "
-        "fused aggregate as CHECK constraints — a wrong value rejects "
-        "the commit). The oracle recomputes the expression "
-        "relationally over all rows.",
+        "other half WITH it precomputed (the write job that stores it "
+        "also counts rows breaking the equation, with the CHECK "
+        "constraints — a wrong value rejects the commit). The oracle "
+        "recomputes the expression relationally over all rows.",
 )
 def q_generated_column(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")

@@ -44,6 +44,11 @@ the single source of its snapshot's metadata, in ``extra``:
 Reads go through the logged schema — never inferred from the data —
 so their cost does not grow with history.
 
+Rows are checked by the job that writes them, as Delta checks CHECK
+constraints inside its write job: constraints, generated-column
+equations and a replaceWhere predicate are counts observed on the write
+and read after it; a rejected write removes its dir before any commit.
+
 Concurrency follows Delta's optimistic protocol: a commit is a
 put-if-absent of ``<version>.json`` (``os.link`` — atomic on POSIX,
 fails EEXIST if another writer won the version). Every writer commits
@@ -69,7 +74,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
@@ -428,23 +433,16 @@ class VersionedTable:
         violates when the expression evaluates to FALSE; NULL passes
         (SQL CHECK semantics).
 
-        Refused while a metadata-only rename is pending: append-time
-        enforcement (:meth:`_check_constraints`) evaluates expressions
-        on the PHYSICAL-named frame — which is correct for constraints
-        registered when logical == physical (physical names are stable
-        data identities across later renames), but an expression
-        validated here against the LOGICAL view would bind to a
-        different (or missing) column at append time."""
+        Refused while a metadata-only rename is pending: the write
+        checks rows on PHYSICAL names (:meth:`_write_checked`), so an
+        expression validated here against the LOGICAL view would bind
+        to a different (or missing) column at write time."""
 
         def validate(head: VersionInfo) -> None:
             self._require_no_column_map("add_constraint", head)
             if not self._schema(head).fields:
                 return  # nothing written yet
-            bad = (
-                self._read_with_deletes(head, head.units)
-                .filter(F.expr(f"({expr}) IS FALSE"))
-                .count()
-            )
+            bad = self._existing_violations(head, {name: expr})
             if bad:
                 raise ValueError(
                     f"cannot add constraint {name!r}: {bad} existing rows "
@@ -619,11 +617,8 @@ class VersionedTable:
                     f"column {name!r} does not exist; backfill it (e.g. "
                     "rewrite with the expression) before registering"
                 )
-            bad = (
-                self._read_with_deletes(head, head.units)
-                .filter(F.expr(f"NOT ({name} <=> ({expr}))"))
-                .count()
-            )
+            checks = self._row_checks({"generated": {name: expr}}, [name])
+            bad = self._existing_violations(head, checks)
             if bad:
                 raise ValueError(
                     f"cannot register generated column {name!r}: {bad} "
@@ -634,8 +629,8 @@ class VersionedTable:
 
     def _fill(self, df: DataFrame, rules: dict) -> tuple[DataFrame, dict]:
         """``df`` with the columns it omits filled under ``rules``:
-        defaults, then generated columns (present ones are validated by
-        :meth:`_check_constraints`), then identity values; and the
+        defaults, then generated columns (present ones are checked by
+        the write, :meth:`_write_checked`), then identity values; and the
         ``identity`` property the commit logs, watermarks advanced past
         the ids assigned here (empty when the table has none)."""
         for key in ("defaults", "generated"):
@@ -656,34 +651,28 @@ class VersionedTable:
         return df, ({"identity": identity} if identity else {})
 
     @staticmethod
-    def _check_constraints(df: DataFrame, rules: dict, what: str) -> None:
-        """Validate incoming rows against every CHECK constraint of
-        ``rules`` in ONE pass (all violation counts in a single
-        aggregate, the DQ framework's fused-check discipline) BEFORE
-        any data lands — a rejected commit leaves no new version and no
-        orphan units that vacuum would have to collect.
-        Generated-column equations ride in the same fused aggregate as
-        implicit constraints, so UPDATE and MERGE cannot break them
-        either."""
-        cons = dict(rules.get("constraints", {}))
+    def _row_checks(rules: dict, columns: list[str]) -> dict[str, str]:
+        """The named checks ``rules`` put on rows with ``columns``: each
+        CHECK constraint, and the equation of each generated column they
+        carry, so UPDATE and MERGE cannot break it either."""
+        checks = dict(rules.get("constraints", {}))
         for name, expr in rules.get("generated", {}).items():
-            if name in df.columns:
-                cons[f"__generated_{name}"] = f"{name} <=> ({expr})"
-        if not cons:
-            return
-        names = list(cons)
-        counts = df.agg(
-            *[
-                F.sum(F.expr(f"({cons[n]}) IS FALSE").cast("long")).alias(n)
-                for n in names
-            ]
-        ).first()
-        bad = {n: counts[n] for n in names if counts[n]}
-        if bad:
-            detail = ", ".join(
-                f"{n} ({cons[n]!r}): {c} rows" for n, c in bad.items()
-            )
-            raise ValueError(f"CHECK constraint violation on {what}: {detail}")
+            if name in columns:
+                checks[f"__generated_{name}"] = f"{name} <=> ({expr})"
+        return checks
+
+    @staticmethod
+    def _violations(checks: dict[str, str]) -> list:
+        """Per named check, an aggregate counting the rows whose
+        expression is FALSE (NULL passes, SQL CHECK semantics). Over no
+        rows it is NULL, which means 0."""
+        return [F.sum(F.expr(f"({e}) IS FALSE").cast("long")).alias(n) for n, e in checks.items()]
+
+    def _existing_violations(self, head: VersionInfo, checks: dict[str, str]) -> int:
+        """Rows of ``head``'s snapshot violating ``checks`` (one check),
+        in the one scan that registering a rule over existing data costs."""
+        snap = self._read_with_deletes(head, head.units)
+        return snap.agg(*self._violations(checks)).first()[0] or 0
 
     # ----------------------------------------------------------- write
 
@@ -717,6 +706,42 @@ class VersionedTable:
             if os.path.isdir(p) and "=" in sub:
                 units.append(self._subunits(rel, sub, depth=len(partition_by) - 1))
         return [u for group in units for u in group]
+
+    def _write_checked(
+        self, df: DataFrame, partition_by, what: str, rules: dict, where: str | None = None
+    ) -> list[str]:
+        """:meth:`_write_units` with the rows checked by the job that
+        writes them: the :meth:`_row_checks` of ``rules`` and, with
+        ``where``, the replaceWhere predicate are counted by one
+        ``df.observe`` on the write, so no pass before it re-runs
+        ``df``'s plan. A violation, or any failure before this returns,
+        removes the commit dir just written and raises (the predicate
+        ahead of the constraints). With nothing to check, nothing is
+        attached."""
+        checks = self._row_checks(rules, df.columns)
+        if where is not None:
+            checks = {"__where": f"coalesce(({where}), false)", **checks}
+        if not checks:
+            return self._write_units(df, partition_by)
+        obs = Observation(f"checks_{uuid.uuid4().hex}")
+        units = self._write_units(df.observe(obs, *self._violations(checks)), partition_by)
+        try:
+            counts = obs.get
+            bad = {n: counts[n] for n in checks if counts[n]}  # NULL over no rows
+            if "__where" in bad:
+                raise ValueError(
+                    f"{bad['__where']} incoming rows do not satisfy the "
+                    f"replaceWhere predicate ({where}); Delta semantics "
+                    "reject the whole commit"
+                )
+            if bad:
+                detail = ", ".join(f"{n} ({checks[n]!r}): {c} rows" for n, c in bad.items())
+                raise ValueError(f"CHECK constraint violation on {what}: {detail}")
+        except BaseException:
+            for root in {u.split("/", 1)[0] for u in units}:
+                shutil.rmtree(os.path.join(self._data, root), ignore_errors=True)
+            raise
+        return units
 
     def _subunits(self, rel: str, sub: str, depth: int) -> list[str]:
         if depth == 0:
@@ -852,6 +877,16 @@ class VersionedTable:
     # costs reading a unit that range stats alone would have read anyway.
     _BLOOM_M, _BLOOM_K = 4096, 5
 
+    @classmethod
+    def _bloom_positions(cls, v):
+        """The k bit positions of value column ``v``: JVM xxhash64 of its
+        string form, seeded 0..k-1, mod m — shared by the build and the
+        probe side, so both hash alike."""
+        m, k = F.lit(cls._BLOOM_M), cls._BLOOM_K
+        return F.array(
+            *[F.pmod(F.xxhash64(v.cast("string"), F.lit(i)), m).cast("int") for i in range(k)]
+        )
+
     def _collect_skipping(self, info: VersionInfo, units: list[str]) -> None:
         """Add the skipping metadata of ``units`` — the units a commit
         adds — to ``info.extra``, for the table's logged ``stats_cols``
@@ -877,7 +912,7 @@ class VersionedTable:
         bloom_cols = info.extra.get("bloom_cols", [])
         if not units or not (stats_cols or bloom_cols):
             return
-        m, k = self._BLOOM_M, self._BLOOM_K
+        m = self._BLOOM_M
         stats = info.extra.setdefault("stats", {})
         blooms = info.extra.setdefault("blooms", {})
         df = self._read_units(info, units)
@@ -912,15 +947,9 @@ class VersionedTable:
             # and the probe side builds values from literals whose Spark
             # type (int) can differ from the column's (bigint) — strings
             # make build and probe agree for every primitive type
-            pos = F.array(
-                *[
-                    F.pmod(F.xxhash64(F.col(c).cast("string"), F.lit(i)), F.lit(m)).cast("int")
-                    for i in range(k)
-                ]
-            )
             for r in (
                 df.filter(F.col(c).isNotNull())
-                .select(d, F.explode(pos).alias("p"))
+                .select(d, F.explode(self._bloom_positions(F.col(c))).alias("p"))
                 .distinct()
                 .groupBy("_dir")
                 .agg(F.collect_set("p").alias("ps"))
@@ -932,9 +961,7 @@ class VersionedTable:
                         arr[p >> 3] |= 1 << (p & 7)
                     blooms.setdefault(u, {})[c] = bytes(arr).hex()
 
-    def _bloom_probe_positions(
-        self, eq: dict, schema=None
-    ) -> dict[str, list[int]]:
+    def _bloom_probe_positions(self, eq: dict, schema=None) -> dict[str, list[int]]:
         """k hash positions per probed value — ONE tiny Spark job (the
         probe must use the same JVM xxhash64 the build used).
 
@@ -944,26 +971,12 @@ class VersionedTable:
         ``'7.0'`` and mark every unit value-free. When ``schema`` (the
         stored StructType) is given, the literal is first cast to the
         column's data type so both sides stringify the same value."""
-        m, k = self._BLOOM_M, self._BLOOM_K
         types = {f.name: f.dataType for f in schema.fields} if schema else {}
-        exprs = []
         cols = list(eq)
-        for i, c in enumerate(cols):
-            lit = F.lit(eq[c])
-            if c in types:
-                lit = lit.cast(types[c])
-            exprs.append(
-                F.array(
-                    *[
-                        F.pmod(
-                            F.xxhash64(lit.cast("string"), F.lit(j)),
-                            F.lit(m),
-                        ).cast("int")
-                        for j in range(k)
-                    ]
-                ).alias(f"p{i}")
-            )
-        row = self.spark.range(1).select(*exprs).first()
+        lits = [F.lit(eq[c]).cast(types[c]) if c in types else F.lit(eq[c]) for c in cols]
+        row = self.spark.range(1).select(
+            *[self._bloom_positions(v).alias(f"p{i}") for i, v in enumerate(lits)]
+        ).first()
         return {c: list(row[f"p{i}"]) for i, c in enumerate(cols)}
 
     def write(
@@ -1030,8 +1043,7 @@ class VersionedTable:
             inv = {l: p for p, l in m.items()}
             stats_cols = [inv.get(c, c) for c in stats_cols or []]
             bloom_cols = [inv.get(c, c) for c in bloom_cols or []]
-        self._check_constraints(df, rules, f"write({mode})")
-        new_units = self._write_units(df, partition_by)
+        new_units = self._write_checked(df, partition_by, f"write({mode})", rules)
 
         # the data units above are immutable and uuid-named, so a lost
         # race only rebuilds the manifest on the new head
@@ -1490,14 +1502,14 @@ class VersionedTable:
         (duplicates on retry) both get wrong.
 
         Delta semantics throughout: every incoming row must satisfy the
-        predicate (else the commit is rejected before any data lands);
-        existing rows where the predicate is NULL survive. Only the
-        units holding a matching row are rewritten
-        (:meth:`_matched_units`, as for every copy-on-write DML); the
-        rest are carried BY REFERENCE with their skipping stats, blooms,
-        and pending merge-on-read tombstones intact. Defaults /
-        generated / identity columns apply to the incoming frame exactly
-        as in :meth:`write`."""
+        predicate, or the whole commit is rejected; existing rows where
+        the predicate is NULL survive. The incoming rows are written
+        first, by the job that checks them (:meth:`_write_checked`), so
+        a rejected call leaves no dir. Only the units holding a matching
+        row are rewritten (:meth:`_matched_units`); the rest are carried
+        BY REFERENCE with their skipping stats, blooms, and pending
+        merge-on-read tombstones intact. Defaults / generated / identity
+        columns apply to the incoming frame exactly as in :meth:`write`."""
         info = self._require_no_column_map("replace_where")
         rules = self._rules(info)
         df, identity = self._fill(df, rules)
@@ -1508,15 +1520,10 @@ class VersionedTable:
                 f"replace_where schema mismatch: incoming "
                 f"{sorted(set(df.columns))} vs table {sorted(existing)}"
             )
-        n_bad = df.filter(f"NOT coalesce(({condition}), false)").count()
-        if n_bad:
-            raise ValueError(
-                f"{n_bad} incoming rows do not satisfy the replaceWhere "
-                f"predicate ({condition}); Delta semantics reject the "
-                "whole commit"
-            )
-        self._check_constraints(df, rules, "REPLACE WHERE")
         part_cols = info.partition_by
+        incoming = self._write_checked(
+            self._as_logged(df, schema), part_cols, "REPLACE WHERE", rules, where=condition
+        )
         touched, carried = self._matched_units(info, lambda t: t.filter(condition))
         new_units: list[str] = []
         if touched:
@@ -1524,7 +1531,7 @@ class VersionedTable:
                 f"NOT coalesce(({condition}), false)"
             )
             new_units += self._write_units(kept, part_cols)
-        new_units += self._write_units(self._as_logged(df, schema), part_cols)
+        new_units += incoming
         return self._next(
             info, "REPLACE WHERE", "overwrite", carried, new_units,
             {"condition": condition, **identity},
@@ -1564,41 +1571,33 @@ class VersionedTable:
                 f"column(s) {sorted(bad_ident)} are GENERATED ALWAYS AS "
                 "IDENTITY and cannot be updated"
             )
-        if mode == "merge-on-read":
-            df = self._read_with_deletes(info, info.units)
-            matched = df.filter(F.expr(f"coalesce(({condition}), false)"))
-            updated = matched.select(
-                *[
-                    F.expr(set_exprs[c]).alias(c) if c in set_exprs else F.col(c)
-                    for c in df.columns
-                ]
+        mor = mode == "merge-on-read"
+        if mor:
+            carried = info.units
+            df = self._read_with_deletes(info, info.units).filter(
+                F.expr(f"coalesce(({condition}), false)")
             )
-            self._check_constraints(updated, rules, "UPDATE(merge-on-read)")
-            new_units = self._write_units(
-                self._as_logged(updated, self._schema(info)), info.partition_by
-            )
-            return self._next(
-                info, "UPDATE", "merge-on-read", info.units, new_units,
-                {"condition": condition, "set": set_exprs}, tombstone=condition,
-            )
-        touched, carried = self._matched_units(info, lambda t: t.filter(condition))
-        if not touched:
-            return info  # nothing matched; current snapshot stands
-        df = self._read_with_deletes(info, touched)
-        cols = [
-            F.when(F.expr(condition), F.expr(e)).otherwise(F.col(c)).alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c, e in ((c, set_exprs.get(c)) for c in df.columns)
-        ]
-        updated = df.select(*cols)
-        self._check_constraints(updated, rules, "UPDATE")
-        new_units = self._write_units(
-            self._as_logged(updated, self._schema(info)), info.partition_by
+        else:
+            touched, carried = self._matched_units(info, lambda t: t.filter(condition))
+            if not touched:
+                return info  # nothing matched; current snapshot stands
+            df = self._read_with_deletes(info, touched)
+
+        def set_col(c: str):
+            e = F.expr(set_exprs[c])
+            return e if mor else F.when(F.expr(condition), e).otherwise(F.col(c))
+
+        updated = df.select(
+            *[set_col(c).alias(c) if c in set_exprs else F.col(c) for c in df.columns]
+        )
+        new_units = self._write_checked(
+            self._as_logged(updated, self._schema(info)), info.partition_by,
+            "UPDATE(merge-on-read)" if mor else "UPDATE", rules,
         )
         return self._next(
-            info, "UPDATE", None, carried, new_units,
+            info, "UPDATE", mode if mor else None, carried, new_units,
             {"condition": condition, "set": set_exprs},
+            tombstone=condition if mor else None,
         )
 
     def changes(
@@ -1911,15 +1910,11 @@ class VersionedTable:
                 "on a natural key instead — inserted rows are assigned "
                 "fresh values)"
             )
-        for bad in (
-            set(idents) & set(update_columns or []),
-            set(idents) & set(update_exprs or {}),
-        ):
-            if bad:
-                raise ValueError(
-                    f"identity column(s) {sorted(bad)} cannot be merge "
-                    "update targets"
-                )
+        bad = set(idents) & {*(update_columns or []), *(update_exprs or {})}
+        if bad:
+            raise ValueError(
+                f"identity column(s) {sorted(bad)} cannot be merge update targets"
+            )
         schema = self._schema(info)
         if not schema.fields:
             # nothing written yet: an append, so a concurrent first
@@ -1983,9 +1978,9 @@ class VersionedTable:
             else:
                 expr = F.when(s_only, sc).otherwise(tc)
             merged_cols.append(expr.alias(c))
-        merged = joined.select(*merged_cols)
         if not insert_unmatched:
-            merged = joined.filter(~s_only).select(*merged_cols)
+            joined = joined.filter(~s_only)
+        merged = joined.select(*merged_cols)
 
         # Inserted rows (source-only, so their identity slot is NULL —
         # the source is barred from carrying it above) get fresh values;
@@ -1997,8 +1992,9 @@ class VersionedTable:
                     merged, name, spec, only_null=True
                 )
 
-        self._check_constraints(merged, rules, "MERGE")
-        new_units = self._write_units(self._as_logged(merged, schema), info.partition_by)
+        new_units = self._write_checked(
+            self._as_logged(merged, schema), info.partition_by, "MERGE", rules
+        )
         return self._next(
             info, "MERGE", None, carried, new_units,
             {

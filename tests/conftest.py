@@ -5,11 +5,12 @@ AQE stays ON (unlike the reference) — we test the plans we ship.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_delta_lakehouse_nyctaxi_spark.session import get_spark
 

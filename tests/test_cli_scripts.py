@@ -7,6 +7,7 @@ SparkSession, not four."""
 from __future__ import annotations
 
 import importlib
+import os
 import sys
 
 import pytest
@@ -17,7 +18,9 @@ from pyspark.sql import functions as F
 def cli(monkeypatch, spark):
     """Import a scripts/ module with its session plumbing bound to the
     test session."""
-    monkeypatch.syspath_prepend("/root/repo/scripts")
+    monkeypatch.syspath_prepend(
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+    )
 
     def load(name):
         mod = importlib.import_module(name)

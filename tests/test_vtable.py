@@ -1996,3 +1996,152 @@ def test_crash_in_vacuum_keeps_retained_versions(spark, tmp_path, monkeypatch):
         {u.split("/", 1)[0] for u in t._versions()[-1].units}
     )
     assert sorted(r.id for r in t.read().collect()) == [10, 11]
+
+
+def _spark_jobs(spark, label, fn):
+    """The number of Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    group = f"{label}-{os.getpid()}-{id(fn)}"
+    sc.setJobGroup(group, label)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(spark, ids, p=None):
+    return _mk(spark, [
+        {"id": i, "v": float(i + 1), "v2": float(i + 1) * 2, "p": i % 4 if p is None else p}
+        for i in ids
+    ])
+
+
+def test_checked_writes_run_no_extra_spark_jobs(spark, tmp_path):
+    """CHECK constraints, generated-column equations and the replaceWhere
+    predicate are counted by the job that writes the rows: append, CoW
+    update, merge and replace_where run as many Spark jobs on a table
+    with a constraint and a generated column as on the same table
+    without rules."""
+    def build(name, rules):
+        t = VersionedTable(spark, str(tmp_path / name))
+        t.write(_rows(spark, range(200)), mode="overwrite", partition_by=["p"])
+        if rules:
+            t.add_constraint("v_pos", "v > 0")
+            t.add_generated_column("v2", "v * 2")
+        return t
+
+    ops = {
+        "append": lambda t: t.write(_rows(spark, range(200, 210)), mode="append"),
+        "update": lambda t: t.update({"v": "v + 1", "v2": "(v + 1) * 2"}, "id = 3"),
+        "merge": lambda t: t.merge(_rows(spark, [5, 300]), keys=["id"]),
+        "replace_where": lambda t: t.replace_where(_rows(spark, [401, 405], p=1), "p = 1"),
+    }
+    jobs = {}
+    for name, rules in (("plain", False), ("ruled", True)):
+        t = build(name, rules)
+        jobs[name] = {op: _spark_jobs(spark, f"{name}-{op}", lambda: fn(t)) for op, fn in ops.items()}
+        assert t.read().filter("p = 1").count() == 2
+    assert jobs["ruled"] == jobs["plain"]
+
+
+def test_rejected_checked_writes_leave_no_dir_and_no_version(spark, tmp_path):
+    """A write whose rows break a rule is rejected after its job ran: the
+    commit dir it wrote is removed and no version commits — for append,
+    merge, both update modes and replace_where (whose predicate and
+    constraint rejections come before it writes its second dir)."""
+    t = VersionedTable(spark, str(tmp_path / "rejected"))
+    t.write(_rows(spark, range(8)), mode="overwrite", partition_by=["p"])
+    t.add_constraint("v_pos", "v > 0")
+    t.add_generated_column("v2", "v * 2")
+    bad = _mk(spark, [{"id": 20, "v": -1.0, "v2": -2.0, "p": 0}])
+    rejected = [
+        ("v_pos", lambda: t.write(bad, mode="append")),
+        ("v_pos", lambda: t.merge(bad.withColumn("id", F.lit(1)), keys=["id"])),
+        ("__generated_v2", lambda: t.update({"v": "v + 1"}, "id = 2")),
+        ("v_pos", lambda: t.update({"v": "-v", "v2": "-v * 2"}, "id = 2", mode="merge-on-read")),
+        ("do not satisfy the replaceWhere", lambda: t.replace_where(
+            _rows(spark, [21], p=2), "p = 0")),
+        ("v_pos", lambda: t.replace_where(bad, "p = 0")),
+    ]
+    before = sorted(tuple(r) for r in t.read().collect())
+    for match, op in rejected:
+        version, dirs = t.latest_version(), sorted(os.listdir(t._data))
+        with pytest.raises(ValueError, match=match):
+            op()
+        assert t.latest_version() == version, match
+        assert sorted(os.listdir(t._data)) == dirs, match
+    assert sorted(tuple(r) for r in t.read().collect()) == before
+
+
+def test_checked_writes_of_no_rows_commit(spark, tmp_path):
+    """An observed count over no rows is NULL and counts as no
+    violation: an empty append, a merge whose source matches nothing and
+    inserts nothing, and an empty replace_where all commit on a table
+    with a constraint and a generated column."""
+    t = VersionedTable(spark, str(tmp_path / "empty"))
+    t.write(_rows(spark, range(8)), mode="overwrite", partition_by=["p"])
+    t.add_constraint("v_pos", "v > 0")
+    t.add_generated_column("v2", "v * 2")
+    empty = _rows(spark, [0]).limit(0)
+    for op in (
+        lambda: t.write(empty, mode="append"),
+        lambda: t.merge(_rows(spark, [100]), keys=["id"], insert_unmatched=False),
+        lambda: t.merge(empty, keys=["id"]),
+        lambda: t.replace_where(empty, "p = 3"),
+    ):
+        version = t.latest_version()
+        op()
+        assert t.latest_version() == version + 1
+    assert sorted(r.id for r in t.read().collect()) == [0, 1, 2, 4, 5, 6]
+
+
+def test_crash_after_data_write_keeps_snapshot_and_retry_converges(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between a checked writer's data write and its commit (the
+    read of the write's check counts raising) leaves the latest version,
+    its rows and the data dir as they were: the written commit dir is
+    removed. Re-running the operation reaches the post-op rows."""
+    from pyspark.sql import Observation
+
+    t = VersionedTable(spark, str(tmp_path / "crash_after_write"))
+    t.write(
+        _mk(spark, [{"id": i, "v": float(i + 1), "p": i % 2} for i in range(4)]),
+        mode="overwrite", partition_by=["p"],
+    )
+    t.add_constraint("v_pos", "v > 0")
+
+    def rows():
+        return sorted((r.id, r.v) for r in t.read().collect())
+
+    def crash(self):
+        raise OSError("crash after the data write")
+
+    ops = [
+        ("append", lambda: t.write(_mk(spark, [{"id": 4, "v": 5.0, "p": 0}]), mode="append"),
+         [(0, 1.0), (1, 2.0), (2, 3.0), (3, 4.0), (4, 5.0)]),
+        ("merge", lambda: t.merge(
+            _mk(spark, [{"id": 1, "v": 10.0, "p": 1}, {"id": 5, "v": 6.0, "p": 1}]), keys=["id"]),
+         [(0, 1.0), (1, 10.0), (2, 3.0), (3, 4.0), (4, 5.0), (5, 6.0)]),
+        ("update", lambda: t.update({"v": "v + 1"}, "id = 2"),
+         [(0, 1.0), (1, 10.0), (2, 4.0), (3, 4.0), (4, 5.0), (5, 6.0)]),
+        ("update(merge-on-read)", lambda: t.update({"v": "v * 2"}, "id = 3", mode="merge-on-read"),
+         [(0, 1.0), (1, 10.0), (2, 4.0), (3, 8.0), (4, 5.0), (5, 6.0)]),
+        ("replace_where", lambda: t.replace_where(
+            _mk(spark, [{"id": 6, "v": 7.0, "p": 0}]), "p = 0"),
+         [(1, 10.0), (3, 8.0), (5, 6.0), (6, 7.0)]),
+    ]
+    for name, op, expected in ops:
+        version, before, dirs = t.latest_version(), rows(), sorted(os.listdir(t._data))
+        monkeypatch.setattr(Observation, "get", property(crash))
+        with pytest.raises(OSError, match="crash after the data write"):
+            op()
+        monkeypatch.undo()
+        assert t.latest_version() == version, name
+        assert rows() == before, name
+        assert sorted(os.listdir(t._data)) == dirs, name
+        op()
+        assert t.latest_version() == version + 1, name
+        assert rows() == expected, name

@@ -11,12 +11,13 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from spark_delta_lakehouse_nyctaxi_spark.queries import REGISTRY
 from spark_delta_lakehouse_nyctaxi_spark.session import get_spark
 
-OUT = os.environ.get("SPARK_GRAFT_PLANS_DIR", "/root/repo/plans/r12")
+OUT = os.environ.get("SPARK_GRAFT_PLANS_DIR", os.path.join(ROOT, "plans", "r12"))
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 

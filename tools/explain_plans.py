@@ -10,10 +10,12 @@ cartesian products. Run after plan-affecting changes:
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE
 from spark_delta_lakehouse_nyctaxi_spark import plans as P
@@ -287,7 +289,7 @@ def main() -> None:
             continue
         rows.append((name, d))
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — physical-plan evidence (generated by "
             "tools/explain_plans.py at sf0.01)\n\n"

@@ -21,7 +21,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_delta_lakehouse_nyctaxi_spark.queries import REGISTRY
 from spark_delta_lakehouse_nyctaxi_spark.session import get_spark

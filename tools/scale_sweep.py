@@ -17,10 +17,12 @@ stage.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from bench import HEADLINE
 from spark_delta_lakehouse_nyctaxi_spark.queries import REGISTRY
@@ -233,7 +235,7 @@ def main() -> None:
     # the scaling record and must survive a table refresh.
     narrative = ""
     try:
-        with open("/root/repo/SCALING.md") as f:
+        with open(os.path.join(ROOT, "SCALING.md")) as f:
             old = f.read()
         idx = old.find("\n## ")
         if idx != -1:
@@ -241,7 +243,7 @@ def main() -> None:
     except FileNotFoundError:
         pass
 
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write(
             "# SCALING — measured headline-query scaling across SFs\n\n"
             "Generated by `python tools/scale_sweep.py` (same warm/median\n"

@@ -5,8 +5,8 @@ dicts between queries so no query's plan is shaped by a sibling's warm
 cache (the r6 verdict finding: q_dup_spectrum measured 52 warm vs 21
 cold, q_longest_dup_run 16 warm vs 67 cold)."""
 from __future__ import annotations
-import json, sys
-sys.path.insert(0, "/root/repo")
+import json, os, sys
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from explain_plans import reset_caches  # tools/ is this script's dir
 from spark_delta_lakehouse_nyctaxi_spark import plans as P
 from spark_delta_lakehouse_nyctaxi_spark.queries import REGISTRY
